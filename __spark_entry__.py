@@ -14,6 +14,9 @@ simhash, LSH/IVF ANN, and the LSH near-dup path.
 
 from __future__ import annotations
 
+import glob
+import inspect
+import json
 import os
 import sys
 from collections.abc import Callable
@@ -295,7 +298,11 @@ def q_gate_distill_weights(spark, sf_dir):
     heuristic gate, by exact-integer class-balanced Gauss-Seidel
     (operators/distill.py).  Output = the 6 learned weights — the
     oracle re-derives every one bit-for-bit from unrolled SQL, so the
-    full training trajectory is value-hash checked."""
+    full training trajectory is value-hash checked.
+
+    Fuzz-safe: the whole trajectory is exact-integer (floored IEEE ratio
+    doubles, HUGEINT/DECIMAL sums, trunc division); a degenerate
+    one-class corpus keeps every weight at 0 in both engines."""
     from quality_filter.operators import distill
 
     _, base = _distill_base(spark, sf_dir)
@@ -411,7 +418,10 @@ def q_rule_ablation_report(spark, sf_dir):
     Catalyst), then an 8-way struct explode feeding a map-side-
     combined 8-row groupBy — no second corpus scan per rule, which is
     how a naive ablation (8 separate gate runs) would burn a 100 TB
-    scan per rule."""
+    scan per rule.
+
+    Fuzz-safe: one flag per quality_gate_docs predicate plus an
+    exact-integer fail count."""
     docs = _t(spark, sf_dir, "documents")
     feats = R.feature_columns(F.col("text"), CFG)
     # LET-bind the feature struct ONCE per row: the 8 flag conditions +
@@ -808,7 +818,10 @@ def q_dsir_bucket_ratios(spark, sf_dir):
     integerized to lr_micro = floor(ln(p/q)*1e9) — the learned "model"
     of the selection, B=1024 rows.  See operators/dsir.py for the
     cross-engine exactness argument and the 100-TB shape (two
-    explode+partial-count passes shuffling O(B) per task)."""
+    explode+partial-count passes shuffling O(B) per task).
+
+    An absent target source (fuzz corpora have host*, not src0) is the
+    spec'd degenerate: all-zero target counts in both engines."""
     return _dsir_ratio_df(spark, sf_dir)
 
 
@@ -880,7 +893,10 @@ def q_url_dedup_docs(spark, sf_dir):
     """URL-level dedup over canonicalized crawl URLs (SURT practice:
     collapse scheme/www/params/fragment variants BEFORE content dedup).
     One map-side-combined shuffle on the canonical key; a URL crawled
-    10^6 times collapses in the partial agg."""
+    10^6 times collapses in the partial agg.
+
+    Fuzz-safe: the url is synthesized from doc_id and source in both
+    engines, so canonicalization never reads fuzzed text."""
     from quality_filter.io import pages
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -1327,7 +1343,11 @@ def q_near_dup_quality_survivors(spark, sf_dir):
     LONGEST member (ties → smallest id) — the keep-best policy a
     production curator uses instead of keep-first.  One max-struct agg
     per cluster (map-side combinable) + a left-anti join for the
-    unclustered corpus; the rank is evaluated only on clustered rows."""
+    unclustered corpus; the rank is evaluated only on clustered rows.
+
+    Fuzz-safe: the keeper is an exact-integer length rank with an id
+    tie-break over the fuzz-proven component algebra, so both engines
+    pick the same member on any corpus."""
     docs = _t(spark, sf_dir, "documents")
     comp = dedup.near_dup_components(q_lsh_band_keys(spark, sf_dir), "doc_id")
     return dedup.near_dup_best_survivors(
@@ -1770,7 +1790,7 @@ def q_doc_quality_decile_bounds(spark, sf_dir):
             ),
             lambda x: F.round(x, 6),
         ).alias("bs")
-    ).head()["bs"]
+    ).head()["bs"] or []  # NULL on an empty table: no bounds, no rows
     promoted = sum(
         (F.col("quality_score") >= F.lit(float(b))).cast("int") for b in bounds
     )
@@ -1796,26 +1816,8 @@ def q_curriculum_order(spark, sf_dir):
     the two-level decomposition IS the total order."""
     from quality_filter.operators import windows as WD
 
-    docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = F.round(R.quality_score_col(feats, CFG), 6)
-    scored = docs.select("doc_id", q.alias("quality_score"))
-    bounds = scored.agg(
-        F.transform(
-            F.percentile(
-                "quality_score", F.array(*[F.lit(i / 10) for i in range(1, 10)])
-            ),
-            lambda x: F.round(x, 6),
-        ).alias("bs")
-    ).head()["bs"]
-    promoted = sum(
-        (F.col("quality_score") >= F.lit(float(b))).cast("int") for b in bounds
-    )
-    tiered = scored.select(
-        "doc_id",
-        (F.lit(10) - promoted).cast("long").alias("decile"),
-        F.md5(F.col("doc_id").cast("string")).alias("_k"),
+    tiered = q_doc_quality_decile_bounds(spark, sf_dir).select(
+        "doc_id", "decile", F.md5(F.col("doc_id").cast("string")).alias("_k")
     )
     out = WD.global_order_positions(tiered, "decile", "_k", "doc_id")
     return out.select("doc_id", "decile", "pos")
@@ -2064,7 +2066,10 @@ def q_toxicity_gate_docs(spark, sf_dir):
     toxicity score (codegen'd regexp_count, no UDF) + the calibrated
     sigmoid threshold gate — exactly how the reference gates NSFW
     (score >= fixed threshold).  Pipeline goldens pin it end-to-end;
-    this registers the scalar contract against the RE2 twin."""
+    this registers the scalar contract against the RE2 twin.
+
+    Fuzz-safe: the lexicon is ASCII, so its word-boundary anchors mean
+    the same in RE2 and Java on any corpus."""
     docs = _t(spark, sf_dir, "documents")
     toks = TS.tokens_simple(F.col("text"))
     n_words = F.size(toks).cast("double")
@@ -2448,7 +2453,10 @@ def q_bm25_top_docs(spark, sf_dir):
     broadcast df dim, per-term scores pivoted to fixed columns and
     added in sorted-term order (never a float SUM over shuffled rows)
     so the final double is the same expression tree in both engines
-    (textagg.bm25_topk)."""
+    (textagg.bm25_topk).
+
+    A fuzzed corpus without the query terms returns no rows in both
+    engines, which passes."""
     docs = _t(spark, sf_dir, "documents")
     return textagg.bm25_topk(docs, "text", "doc_id", BM25_QUERY_TERMS, k=BM25_K)
 
@@ -2492,7 +2500,10 @@ def q_bpe_merge_round(spark, sf_dir):
     non-overlapping merge expressed as a literal replace over the
     spaced symbol form — no UDF; the winner crosses the driver as one
     string and re-enters the recount plan as a literal
-    (textagg.bpe_merge_round)."""
+    (textagg.bpe_merge_round).
+
+    Fuzz-safe: the spaced form uses ([\\s\\S]), the one dot-class
+    spelling Java and RE2 read identically on any token bytes."""
     docs = _t(spark, sf_dir, "documents")
     return textagg.bpe_merge_round(docs, "text", k=BPE_MERGE_K)
 
@@ -2507,7 +2518,10 @@ def q_bpe_train_merges(spark, sf_dir):
     map + map-side-combined pair aggregate over the WORD dimension, one
     winning pair crossing the driver per round.  Sentinel-prefixed
     symbols make the literal-replace merge exact for multi-char symbols
-    (textagg.bpe_train_merges)."""
+    (textagg.bpe_train_merges).
+
+    Fuzz-safe: data \\x01 bytes are stripped char-level by spec in both
+    engines, so adversarial sentinels cannot split them."""
     docs = _t(spark, sf_dir, "documents")
     return textagg.bpe_train_merges(docs, "text", n_merges=BPE_TRAIN_MERGES)
 
@@ -2518,7 +2532,10 @@ def q_bpe_token_counts_docs(spark, sf_dir):
     zero-shuffle narrow map with NO HOF and no explode: one sentinel
     spacing regexp, K literal replaces, and sentinel-count arithmetic
     (every symbol owns exactly one \\x01), all codegen'd JVM string ops
-    (textagg.bpe_token_counts)."""
+    (textagg.bpe_token_counts).
+
+    Fuzz-safe: data sentinels are stripped char-level in both engines,
+    and astral chars count 1 in both length() implementations."""
     docs = _t(spark, sf_dir, "documents")
     return textagg.bpe_token_counts(
         docs, "text", "doc_id", n_merges=BPE_TRAIN_MERGES
@@ -2570,7 +2587,10 @@ def q_winnowing_fingerprints(spark, sf_dir):
     """Winnowing (MOSS) fingerprints: window-min over k-gram hashes —
     the local-substring-similarity complement to minhash/simhash, with
     the ~2/(w+1) density bound.  Zero-shuffle narrow map
-    (dedup.winnowing_fingerprints)."""
+    (dedup.winnowing_fingerprints).
+
+    Fuzz-safe: the k-gram hashes come from the md5 universe, so both
+    engines choose the same window minima."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.winnowing_fingerprints(docs, "text", "doc_id")
 
@@ -2622,7 +2642,10 @@ def q_host_trustrank(spark, sf_dir):
     composition host_reputation only JOINS; this one feeds quality
     INTO the rank recurrence.  Teleport weights are the same
     floor(score·1e6) BIGINT masses; the whole recurrence stays exact
-    integer (graph.pagerank_personalized)."""
+    integer (graph.pagerank_personalized).
+
+    With zero total trust weight (TW = 0) the teleport is zero in both
+    engines by spec."""
     docs = _t(spark, sf_dir, "documents")
     pages = _ol_pages(docs)  # bound ONCE: host map + edges share the subtree
     feats = R.feature_columns(F.col("text"), CFG)
@@ -2815,7 +2838,12 @@ def q_outlink_host_edges(spark, sf_dir):
     opaque-scheme classes), all JVM-native narrow maps; the only
     exchange is the map-side-combined (src, dst) count, O(unique host
     pairs) — link-frequency skew collapses in the partial agg
-    (operators/links.py)."""
+    (operators/links.py).
+
+    Fuzz-safe, for the whole outlink tier: the synthesized html blanks
+    <, > and " out of the doc text in both engines, so the href set is
+    exactly the generated one on any corpus; host parsing and the anchor
+    split are ASCII regexes that Java and RE2 read identically."""
     docs = _t(spark, sf_dir, "documents")
     return links.host_edges(_ol_pages(docs))
 
@@ -3070,7 +3098,10 @@ def q_exact_substring_dedup(spark, sf_dir):
     window duplicated anywhere earlier in the corpus is excised;
     surviving token sequence pinned by md5.  Window relation is
     O(tokens) like shingles; the keeper min-struct collapses hot spans
-    map-side (dedup.excise_duplicate_spans)."""
+    map-side (dedup.excise_duplicate_spans).
+
+    Fuzz-safe: md5 window universe plus positional array algebra; the
+    oracle pins the NULL-vs-empty join seam with coalesce."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.excise_duplicate_spans(docs, "text", "doc_id")
 
@@ -3112,7 +3143,7 @@ def q_collocation_pmi(spark, sf_dir):
     return textagg.collocation_pmi_topk(docs, "text", k=PMI_K, min_count=PMI_MIN_COUNT)
 
 
-def q_doc_novelty(spark, sf_dir):
+def q_doc_novelty_docs(spark, sf_dir):
     """Per-doc novelty: fraction of the doc's distinct 3-gram shingles
     first seen in THIS doc (corpus-wide min-id first occurrence) — the
     originality signal separating source pages from mirrors/recombined
@@ -3122,7 +3153,7 @@ def q_doc_novelty(spark, sf_dir):
     return dedup.doc_novelty(docs, "text", "doc_id", n=NOVELTY_NGRAM)
 
 
-def q_word_entropy(spark, sf_dir):
+def q_word_entropy_docs(spark, sf_dir):
     """Shannon word-entropy + type-token ratio per doc — the
     low-entropy gibberish/boilerplate detector of CCNet/Gopher-style
     webtext filters (templated or repeated text scores near 0; TTR is
@@ -3131,7 +3162,10 @@ def q_word_entropy(spark, sf_dir):
     (dedup.let_bound — Catalyst would otherwise re-split the text once
     per distinct word), counts via the repetition_profile
     distinct×filter pattern, entropy via one aggregate fold.  `+ 0.0`
-    canonicalizes the all-identical-words -0.0 on both engines."""
+    canonicalizes the all-identical-words -0.0 on both engines.
+
+    Fuzz-safe: ASCII-space tokens and log2 of rational counts (the
+    pmi/bm25 ln class), rounded to 6 dp in both engines."""
     docs = _t(spark, sf_dir, "documents")
 
     def ent_ttr(toks):
@@ -3154,7 +3188,7 @@ def q_word_entropy(spark, sf_dir):
     ).select("doc_id", "_e.word_entropy", "_e.ttr")
 
 
-def q_encoding_noise(spark, sf_dir):
+def q_encoding_noise_docs(spark, sf_dir):
     """Mojibake / encoding-damage signals per doc: U+FFFD count,
     control-char count, non-ASCII ratio, and the suspect flag —
     codegen'd regexp_count narrow maps (functions/textstats
@@ -3206,7 +3240,10 @@ def q_tfidf_cosine_pairs(spark, sf_dir):
 def q_kn_bigram_counts(spark, sf_dir):
     """Distributed LM-training counts: the c(w1,w2) table the engine's
     own 5-gram perplexity scorer would retrain from at corpus scale.
-    One O(distinct bigrams) shuffle (textagg.kn_bigram_counts)."""
+    One O(distinct bigrams) shuffle (textagg.kn_bigram_counts).
+
+    Fuzz-safe: pure positional token algebra (zip_with slices match
+    DuckDB's double-unnest zip) and exact integers."""
     docs = _t(spark, sf_dir, "documents")
     return textagg.kn_bigram_counts(docs, "text")
 
@@ -3220,7 +3257,7 @@ def q_kn_continuation_stats(spark, sf_dir):
     return textagg.kn_continuation_stats(docs, "text")
 
 
-def q_mojibake_repair(spark, sf_dir):
+def q_mojibake_repair_docs(spark, sf_dir):
     """Mojibake repair (ftfy-lite): the ordered literal replace chain
     that undoes common UTF-8-as-latin1 double-encode artifacts — the
     fixer companion to encoding_noise_docs' detector.  Documents are
@@ -3246,7 +3283,7 @@ OOV_VOCAB = 30  # small vs the ~40-word synthetic vocabulary so the
 # OOV branch is genuinely exercised at test scale
 
 
-def q_oov_rate(spark, sf_dir):
+def q_oov_rate_docs(spark, sf_dir):
     """Per-doc OOV rate vs the corpus top-V vocabulary — the tokenizer
     coverage report (deterministic top-V: count desc, term asc; exact
     integer counts; broadcast vocab dim — textagg.oov_rate)."""
@@ -3338,7 +3375,10 @@ def q_url_blocklist_gate(spark, sf_dir):
     precedent — ads.w0.site0.com takes 'ads' over site0.com's
     'tracker').  Suffix expansion is a narrow HOF, the list a broadcast
     dim, the winner a max-struct on the unique page id
-    (links.blocklist_gate)."""
+    (links.blocklist_gate).
+
+    Fuzz-safe: the host is synthesized from doc_id by integer arithmetic
+    and concat, so no text column is ever read."""
     docs = _t(spark, sf_dir, "documents")
     bl = spark.createDataFrame(
         list(links.HOST_BLOCKLIST), "rule string, category string"
@@ -3691,14 +3731,17 @@ def q_segment_dedup_docs(spark, sf_dir):
 BOILER_MIN_DF = 3  # sf0.01 has 15 segments at df>=3 (max 6) — removal fires
 
 
-def q_boilerplate_scrub(spark, sf_dir):
+def q_boilerplate_scrub_docs(spark, sf_dir):
     """RefinedWeb-style boilerplate scrub: remove EVERY occurrence of
     any segment repeated >= BOILER_MIN_DF times corpus-wide (the
     nav-bar / cookie-banner verb; segment_dedup's keep-first sibling
     keeps one copy, the boilerplate verb keeps none).  The hot set is a
     bounded dimension (<= occurrences/min_df by pigeonhole) broadcast
     as ONE array row; the corpus is never shuffled — codegen'd HOF
-    filter + array_join narrow map (see dedup.boilerplate_segment_scrub)."""
+    filter + array_join narrow map (see dedup.boilerplate_segment_scrub).
+
+    Fuzz-safe: segments are exact strings and their df exact counts, so
+    the hot set is identical in both engines."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.boilerplate_segment_scrub(
         docs, "text", "doc_id", SEGMENT_WORDS, BOILER_MIN_DF
@@ -3794,197 +3837,34 @@ def q_knn_ivf(spark, sf_dir):
     return similarity.knn_ivf(emb, "embedding", "vec_id", qvec, cents, n_probe=IVF_PROBE, k=10)
 
 
+def _last_reported_round() -> dict[str, int]:
+    """query name -> the last ``CORRECTNESS_r<N>.json`` round that
+    reported it (names no report mentions are absent)."""
+    last: dict[str, int] = {}
+    for path in sorted(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json"))):
+        rnd = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
+        with open(path) as f:
+            for name in json.load(f):
+                last[name] = max(last.get(name, 0), rnd)
+    return last
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # INVARIANT (checked in tests): every query WITHOUT a driver-green row
-    # in the last two CORRECTNESS reports must sit inside the driver's
-    # ~50-entry window — insert NEW queries at the FRONT, and re-check
-    # `[n for n in names[50:] if n not in seen]` is empty after any edit.
-    # Round-5 rotation (VERDICT r4 item 1): the 30-entry overflow block
-    # (anchor_text_terms .. cross_source_dup_matrix, never driver-reported)
-    # leads; the oldest-reported (r2/r3) entries fill the remaining window
-    # slots; the 50 r4-green entries rotate to the back.
-    return {
-        "moore_lewis_selection": q_moore_lewis_selection,
-        "pii_pseudonymize_docs": q_pii_pseudonymize_docs,
-        "bbit_minhash_estimate": q_bbit_minhash_estimate,
-        "hll_vocab_estimate": q_hll_vocab_estimate,
-        "gate_distill_weights": q_gate_distill_weights,
-        "distilled_gate_agreement": q_distilled_gate_agreement,
-        "near_dup_quality_survivors": q_near_dup_quality_survivors,
-        "boilerplate_scrub_docs": q_boilerplate_scrub,
-        "decontamination_report": q_decontamination_report,
-        "ccnet_ppl_buckets": q_ccnet_ppl_buckets,
-        "url_blocklist_gate": q_url_blocklist_gate,
-        "ann_recall_report": q_ann_recall_report,
-        "doremi_mixture_weights": q_doremi_mixture_weights,
-        "ngram_jaccard_global": q_ngram_jaccard_global,
-        "minhash_band_scurve": q_minhash_band_scurve,
-        "doremi_token_budget": q_doremi_token_budget,
-        "semantic_decontamination": q_semantic_decontamination,
-        "corpus_curation_v3": q_corpus_curation_v3,
-        "corpus_curation_v2_staged": q_corpus_curation_v2_staged,
-        "crawl_media_near_dup": q_crawl_media_near_dup,
-        "anchor_text_terms": q_anchor_text_terms,
-        "robots_noindex_flags": q_robots_noindex_flags,
-        "bpe_merge_round": q_bpe_merge_round,
-        "crawl_frontier_topk": q_crawl_frontier_topk,
-        "warc_roundtrip_stats": q_warc_roundtrip_stats,
-        "host_degree_stats": q_host_degree_stats,
-        "frontier_politeness_rounds": q_frontier_politeness_rounds,
-        "exact_substring_dedup": q_exact_substring_dedup,
-        "dedup_savings_report": q_dedup_savings_report,
-        "winnowing_survivors": q_winnowing_survivors,
-        "host_reputation": q_host_reputation,
-        "collocation_pmi": q_collocation_pmi,
-        "doc_novelty_docs": q_doc_novelty,
-        "mirror_host_pairs": q_mirror_host_pairs,
-        "word_entropy_docs": q_word_entropy,
-        "tfidf_cosine_pairs": q_tfidf_cosine_pairs,
-        "frontier_robots": q_frontier_robots,
-        "encoding_noise_docs": q_encoding_noise,
-        "corpus_datasheet": q_corpus_datasheet,
-        "knn_quantized_int8": q_knn_quantized_int8,
-        "host_trustrank": q_host_trustrank,
-        "kn_doc_surprisal": q_kn_doc_surprisal,
-        "host_hits": q_host_hits,
-        "redirect_resolution": q_redirect_resolution,
-        "crawl_budget_allocation": q_crawl_budget_allocation,
-        "wet_roundtrip_stats": q_wet_roundtrip_stats,
-        "oov_rate_docs": q_oov_rate,
-        "mojibake_repair_docs": q_mojibake_repair,
-        "crawl_fetch_plan": q_crawl_fetch_plan,
-        "cross_source_dup_matrix": q_cross_source_dup_matrix,
-        # round-5 late additions: the driver window (50) is already full
-        # of never-reported entries, so these sit as the contiguous
-        # overflow block right after it (window-invariant test shape);
-        # they are verified by the local full sweep + fuzz + pytest.
-        "distilled_gate_reliability": q_distilled_gate_reliability,
-        "cluster_balanced_sample": q_cluster_balanced_sample,
-        "rule_ablation_report": q_rule_ablation_report,
-        "bpe_train_merges": q_bpe_train_merges,
-        "bpe_token_counts_docs": q_bpe_token_counts_docs,
-        "bpe_compression_by_lang": q_bpe_compression_by_lang,
-        "curriculum_order": q_curriculum_order,
-        "packed_docs_bpe": q_packed_docs_bpe,
-        "zipf_fit_audit": q_zipf_fit_audit,
-        "heaps_fit_audit": q_heaps_fit_audit,
-        "bpe_vocab": q_bpe_vocab,
-        "bpe_merge_curve": q_bpe_merge_curve,
-        "minhash_jaccard_estimate": q_minhash_jaccard_estimate,
-        "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-        "knn_bruteforce": q_knn_bruteforce,
-        "purchase_last_view_asof": q_purchase_last_view_asof,
-        "orders_grouping_sets": q_orders_grouping_sets,
-        "event_type_pivot": q_event_type_pivot,
-        "event_counts_unpivot": q_event_counts_unpivot,
-        "doc_quality_deciles": q_doc_quality_deciles,
-        "doc_length_quantiles": q_doc_length_quantiles,
-        "running_value_sum": q_running_value_sum,
-        "active_positive_custkeys": q_active_positive_custkeys,
-        "shipping_priority": q_shipping_priority,
-        "supplier_part_breadth": q_supplier_part_breadth,
-        "customer_order_cume": q_customer_order_cume,
-        "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
-        "pii_scrub_docs": q_pii_scrub_docs,
-        "simhash_docs": q_simhash_docs,
-        "simhash_near_dup": q_simhash_near_dup,
-        "hopping_event_stats": q_hopping_event_stats,
-        "embedding_clusters": q_embedding_clusters,
-        "knn_lsh": q_knn_lsh,
-        "knn_lsh_multiprobe": q_knn_lsh_multiprobe,
-        "knn_ivf": q_knn_ivf,
-        "knn_join": q_knn_join,
-        "knn_join_broadcast": q_knn_join_broadcast,
-        "embedding_centroids_by_label": q_embedding_centroids_by_label,
-        "benchmark_decontamination": q_benchmark_decontamination,
-        "source_mixing_rates": q_source_mixing_rates,
-        "pricing_summary": q_pricing_summary,
-        "revenue_by_nation": q_revenue_by_nation,
-        "top_suppliers_by_revenue": q_top_suppliers_by_revenue,
-        "rollup_orders": q_rollup_orders,
-        "customers_without_orders": q_customers_without_orders,
-        "salted_user_stats": q_salted_user_stats,
-        "decimated_events": q_decimated_events,
-        "tumbling_agg_mean": q_tumbling_agg_mean,
-        "tumbling_agg_median": q_tumbling_agg_median,
-        "tumbling_agg_max": q_tumbling_agg_max,
-        "tumbling_agg_min": q_tumbling_agg_min,
-        "hourly_event_stats": q_hourly_event_stats,
-        "forward_fill_purchase": q_forward_fill_purchase,
-        "sessionized_counts": q_sessionized_counts,
-        "topk_events_per_user": q_topk_events_per_user,
-        "text_stats": q_text_stats,
-        "stopword_ratio_docs": q_stopword_ratio_docs,
-        "symbol_density_docs": q_symbol_density_docs,
-        "quality_gate_docs": q_quality_gate_docs,
-        "quality_contribs_docs": q_quality_contribs_docs,
-        "dup_ngram_ratio_docs": q_dup_ngram_ratio_docs,
-        "packed_docs": q_packed_docs,
-        "corpus_curation": q_corpus_curation,
-        "docs_hash_sample": q_docs_hash_sample,
-        "docs_stratified_sample": q_docs_stratified_sample,
-        "corpus_top_terms": q_corpus_top_terms,
-        "tfidf_top_docs": q_tfidf_top_docs,
-        "lang_guess_docs": q_lang_guess_docs,
-        "doc_fingerprints": q_doc_fingerprints,
-        "dedup_exact_docs": q_dedup_exact_docs,
-        "minhash_signatures": q_minhash_signatures,
-        "lsh_band_keys": q_lsh_band_keys,
-        "near_dup_pairs": q_near_dup_pairs,
-        "near_dup_clusters": q_near_dup_clusters,
-        "near_dup_survivors": q_near_dup_survivors,
-        "ngram_jaccard_dups": q_ngram_jaccard_dups,
-        "host_pagerank": q_host_pagerank,
-        "bm25_top_docs": q_bm25_top_docs,
-        "bm25_indexed": q_bm25_indexed,
-        "langid_confusion": q_langid_confusion,
-        "kn_bigram_counts": q_kn_bigram_counts,
-        "kn_continuation_stats": q_kn_continuation_stats,
-        "score_drift_psi": q_score_drift_psi,
-        "winnowing_fingerprints": q_winnowing_fingerprints,
-        "winnowing_pairs": q_winnowing_pairs,
-        "corpus_snapshot_diff": q_corpus_snapshot_diff,
-        "bpe_pair_counts": q_bpe_pair_counts,
-        "orc_roundtrip_stats": q_orc_roundtrip_stats,
-        "dsir_bucket_ratios": q_dsir_bucket_ratios,
-        "dsir_logweights_docs": q_dsir_logweights_docs,
-        "dsir_sample_docs": q_dsir_sample_docs,
-        "kmeans_step": q_kmeans_step,
-        "kmeans_refined_clusters": q_kmeans_refined_clusters,
-        "jsonl_roundtrip_stats": q_jsonl_roundtrip_stats,
-        "csv_roundtrip_stats": q_csv_roundtrip_stats,
-        "unit_dedup_docs": q_unit_dedup_docs,
-        "gate_funnel": q_gate_funnel,
-        "url_dedup_docs": q_url_dedup_docs,
-        "semantic_dedup": q_semantic_dedup,
-        "near_dup_clusters_labelprop": q_near_dup_clusters_labelprop,
-        "gate_distill_stats": q_gate_distill_stats,
-        "corpus_token_budget": q_corpus_token_budget,
-        "containment_pairs": q_containment_pairs,
-        "repetition_profile_docs": q_repetition_profile_docs,
-        "corpus_curation_v2": q_corpus_curation_v2,
-        "weighted_sample_docs": q_weighted_sample_docs,
-        "term_cms_sketch": q_term_cms_sketch,
-        "pii_hit_counts_docs": q_pii_hit_counts_docs,
-        "toxicity_gate_docs": q_toxicity_gate_docs,
-        "minhash_containment_estimate": q_minhash_containment_estimate,
-        "hourly_unique_users": q_hourly_unique_users,
-        "benchmark_decontamination_bloom": q_benchmark_decontamination_bloom,
-        "segment_dedup_docs": q_segment_dedup_docs,
-        "incremental_near_dup": q_incremental_near_dup,
-        "incremental_curation": q_incremental_curation,
-        "source_reputation_flags": q_source_reputation_flags,
-        "quality_score_histogram": q_quality_score_histogram,
-        "doc_chunks": q_doc_chunks,
-        "mixture_epoch_upsample": q_mixture_epoch_upsample,
-        "temperature_mixture_rates": q_temperature_mixture_rates,
-        "temperature_mixture_sample": q_temperature_mixture_sample,
-        "doc_quality_decile_bounds": q_doc_quality_decile_bounds,
-        "doc_length_quantiles_approx": q_doc_length_quantiles_approx,
-        "media_near_dup": q_media_near_dup,
-        "outlink_host_edges": q_outlink_host_edges,
-        "outlink_pagerank": q_outlink_pagerank,
-    }
+    """Every module-level ``q_<name>`` function under key ``<name>``.
+
+    Order = least recently driver-verified first: never-reported names
+    lead, then by the last CORRECTNESS round that reported them; ties
+    keep definition order.  The driver reports only the first ~50
+    entries per round, so each round's report rotates the next-oldest
+    block into its window without any hand-kept list."""
+    defined = [
+        (name[len("q_"):], fn)
+        for name, fn in globals().items()
+        if name.startswith("q_") and inspect.isfunction(fn)
+    ]
+    last = _last_reported_round()
+    defined.sort(key=lambda kv: last.get(kv[0], 0))
+    return dict(defined)
 
 
 # ---------------------------------------------------------------------------

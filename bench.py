@@ -33,7 +33,6 @@ REPLICATE = int(os.environ.get("QF_BENCH_REPLICATE", "10"))
 # parallelism level sees the same input layout (≥2 waves at 32 cores)
 PAGES_PARTITIONS = 64
 TIMED_REPS = int(os.environ.get("QF_BENCH_TIMED_REPS", "2"))
-PAGES_CACHE = f"/tmp/qf_bench_pages_{N_PAGES}x{REPLICATE}_p{PAGES_PARTITIONS}"
 TOTAL_PAGES = N_PAGES * REPLICATE
 
 # operator queries timed from the registry (representative of each family)
@@ -82,26 +81,27 @@ BENCH_QUERIES = [
 ]
 
 
-def ensure_pages(spark) -> str:
-    """Deterministic pages corpus parquet, built once and cached (build
+def ensure_pages(spark, replicate: int = REPLICATE) -> str:
+    """Deterministic pages corpus parquet (N_PAGES base rows replicated
+    row-parallel with rewritten urls), built once and cached (build
     time is NOT part of the measured pipeline)."""
-    marker = os.path.join(PAGES_CACHE, "_SUCCESS")
-    if not os.path.exists(marker):
+    path = f"/tmp/qf_bench_pages_{N_PAGES}x{replicate}_p{PAGES_PARTITIONS}"
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from quality_filter.corpus import generate_pages, pages_spark_schema
 
         from pyspark.sql import functions as F
 
         pdf = generate_pages(N_PAGES, seed=2026).drop(columns=["cls"])
         sdf = spark.createDataFrame(pdf, schema=pages_spark_schema())
-        if REPLICATE > 1:
-            reps = F.explode(F.sequence(F.lit(0), F.lit(REPLICATE - 1))).alias("_rep")
+        if replicate > 1:
+            reps = F.explode(F.sequence(F.lit(0), F.lit(replicate - 1))).alias("_rep")
             sdf = (
                 sdf.select("*", reps)
                 .withColumn("url", F.concat("url", F.lit("#r"), F.col("_rep")))
                 .drop("_rep")
             )
-        sdf.repartition(PAGES_PARTITIONS).write.mode("overwrite").parquet(PAGES_CACHE)
-    return PAGES_CACHE
+        sdf.repartition(PAGES_PARTITIONS).write.mode("overwrite").parquet(path)
+    return path
 
 
 def force(df) -> None:

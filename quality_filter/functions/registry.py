@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from quality_filter import features as FT
 from quality_filter.config import DEFAULT_ARTIFACT_DIR, load_config
-from quality_filter.operators.extract import extract_text_udf
+from quality_filter.operators.extract import make_extract_udf
 from quality_filter.operators.score import make_score_udf
 
 
@@ -26,7 +26,7 @@ def register_udfs(spark: SparkSession, artifact_dir: str = DEFAULT_ARTIFACT_DIR)
     All Arrow-vectorized; qf_scrub_pii shares the oracle's scrub code so
     its output is byte-identical to the native pipeline column."""
     cfg = load_config(artifact_dir)
-    spark.udf.register("qf_extract_text", extract_text_udf)
+    spark.udf.register("qf_extract_text", make_extract_udf())
     spark.udf.register("qf_score", make_score_udf(artifact_dir, cfg.profile))
 
     pii_rules = cfg.pii_rules

@@ -17,9 +17,17 @@ from pyspark.sql import types as T
 from quality_filter.text.extraction import extract_text_from_bytes
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text_from_bytes)
+def make_extract_udf():
+    """Factory: (html) -> text pandas UDF.  Built per plan, like
+    ``make_score_udf``: a UDF object binds to the SparkContext that first
+    evaluates it, so a module-level one would outlive a session restart
+    and report its accumulator to a dead context."""
+
+    @F.pandas_udf(T.StringType())
+    def extract_text_udf(html: pd.Series) -> pd.Series:
+        return html.map(extract_text_from_bytes)
+
+    return extract_text_udf
 
 
 def extracted_text_col(text: Column, html: Column) -> Column:
@@ -27,4 +35,4 @@ def extracted_text_col(text: Column, html: Column) -> Column:
     extraction (the in-memory-handle passthrough analog,
     /root/reference/opennsfw2/_inference.py:31-32).  The UDF is only
     evaluated where ``text`` is NULL thanks to conditional evaluation."""
-    return F.when(text.isNotNull(), text).otherwise(extract_text_udf(html))
+    return F.when(text.isNotNull(), text).otherwise(make_extract_udf()(html))

@@ -1395,6 +1395,11 @@ def _loglog_ls_fit(points: DataFrame, xv: Column, yv: Column, count_alias: str) 
     dimension (zipf: the K-term head; heaps: <= 64 checkpoints) so the
     structural overflow bounds hold (see zipf_fit docstring)."""
     dec = "decimal(38,0)"
+    # ASSUMPTION: Spark's ln (java.lang.Math.log) and DuckDB's (the C
+    # libm log) agree to the last ulp.  Both are correctly rounded in
+    # practice; a 1-ulp split would flip a floor only when ln(v)*1e9
+    # sits within ~1e-7 of an integer.  Same bet as dsir.LR_SCALE's
+    # floor(ln(...)*1e9) — see the dsir module docstring.
     x = F.floor(F.log(xv.cast("double")) * ZIPF_SCALE).cast(dec)
     y = F.floor(F.log(yv.cast("double")) * ZIPF_SCALE).cast(dec)
     agg = points.select(x.alias("x"), y.alias("y")).agg(

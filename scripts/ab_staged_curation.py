@@ -37,7 +37,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 STAGE_PATH = "/tmp/qf_ab_staged_gated"
@@ -51,7 +50,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     import __spark_entry__ as E
-    from soak_10m import ensure_pages
+    from bench import ensure_pages
 
     from quality_filter.operators import dedup
     from quality_filter.pipeline import tiered_scored

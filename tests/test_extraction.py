@@ -88,3 +88,40 @@ def test_gzip_payloads_transparently_decompressed():
     assert extract_text_from_bytes(corrupt) is None  # corrupt deflate/crc
     # a NON-gzip payload starting with neither magic is unaffected
     assert extract_text_from_bytes(html) == want
+
+
+def test_extraction_udf_survives_session_restart():
+    """The extraction UDF is built per plan, so a second session in the
+    same process gets a UDF bound to its own SparkContext: no task may
+    fail to report its accumulator to the stopped first context."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    code = textwrap.dedent(
+        """
+        from pyspark.sql import functions as F
+        from quality_filter.operators.extract import extracted_text_col
+        from quality_filter.session import get_spark
+        from quality_filter.text.extraction import extract_text_from_bytes
+
+        html = b"<html><body><p>hello restart world</p></body></html>"
+        for _ in range(2):
+            spark = get_spark(cpus=1, app_name="qf-restart")
+            df = spark.createDataFrame([(None, html)], "text string, html binary")
+            got = df.select(extracted_text_col(F.col("text"), F.col("html"))).first()[0]
+            assert got == extract_text_from_bytes(html), got
+            spark.stop()
+        """
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        env=dict(os.environ, PYTHONPATH=repo),
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "Failed to update accumulator" not in out.stderr

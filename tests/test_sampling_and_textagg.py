@@ -448,7 +448,7 @@ def test_oov_rate_registry_conservation(spark):
     and with the small test vocabulary some OOV genuinely occurs."""
     import __spark_entry__ as E
 
-    out = E.q_oov_rate(spark, SF).collect()
+    out = E.q_oov_rate_docs(spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     assert len(out) == docs.count()
     assert all(0 <= r["n_oov"] <= r["n_tokens"] for r in out)

@@ -666,6 +666,49 @@ def test_driver_window_covers_unreported_queries():
         )
 
 
+def test_registry_contract():
+    """Each query is declared once, as a ``q_<name>`` function: the
+    registry, its oracle twins and the fuzz exclusions all key off that
+    name (no Spark needed)."""
+    import importlib.util
+    import os
+
+    import __spark_entry__ as E
+
+    qs = E.queries()
+    assert set(qs) == set(E.oracle_sql())
+    assert all(fn.__name__ == "q_" + name for name, fn in qs.items())
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "fuzz_oracle", os.path.join(repo, "scripts", "fuzz_oracle.py")
+    )
+    fuzz = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(fuzz)
+    for name, reason in fuzz.FUZZ_EXCLUDED.items():
+        assert name in qs and reason.strip(), name
+
+
+@pytest.mark.parametrize("name", ["curriculum_order", "doc_quality_decile_bounds"])
+def test_decile_queries_agree_on_empty_corpus(spark, tmp_path, name):
+    """An empty documents table has no decile bounds (percentile of
+    nothing is NULL): Spark and the DuckDB twin both return zero rows
+    with the same columns."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    path = tmp_path / "documents.parquet"
+    pq.write_table(pq.read_schema(f"{SF}/documents.parquet").empty_table(), path)
+    sdf = E.queries()[name](spark, str(tmp_path))
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    odf = con.sql(E.oracle_sql()[name])
+    assert sorted(sdf.columns) == sorted(d[0] for d in odf.description)
+    assert sdf.collect() == [] and odf.fetchall() == []
+
+
 def test_int8_quantization_matches_numpy_spec_bitwise(spark, emb):
     """quantize_int8_col emits EXACTLY the integers of the IEEE spec
     floor(x * (127/max|x|) + 0.5) recomputed in numpy float64, row for
