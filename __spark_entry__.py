@@ -1111,8 +1111,8 @@ def _v2_reps(docs):
     """Stages 0-2 of the v2 curation flow: URL dedup → heuristic gate →
     exact-dup representatives.  This is the relation the downstream
     dedup tiers reference MANY times (signatures, components, survivor
-    join, containment, sample) — the staged variant materializes it
-    once instead of recomputing the gate per reference."""
+    join, containment, sample) — _v2_staged materializes it once
+    instead of recomputing the gate per reference."""
     from pyspark.sql import Window
 
     from quality_filter.io import pages
@@ -1173,16 +1173,32 @@ def _v2_tail(reps):
     return packing.pack_sequences(sampled, "doc_id", n_tokens, PACK_CAPACITY, PACK_SHARDS)
 
 
+def _v2_staged(spark, sf_dir, docs, tag):
+    """The v2 flow with a persist boundary: the representative table
+    (_v2_reps) is written ONCE to a per-(tag, input) scratch dir (write →
+    parquet scan, the write_filtered → read stage seam) and every
+    downstream tier reads the scan instead of recomputing the URL-canon
+    + gate + window chain per reference.  Measured against the composed
+    single plan with identical rows: 4.5 s vs 10.9 s at sf0.1
+    (BENCH/ROUND5.md)."""
+    from quality_filter.io import formats
+
+    path = formats.scratch_path(tag, sf_dir)
+    _v2_reps(docs).write.mode("overwrite").parquet(path)
+    return _v2_tail(spark.read.parquet(path))
+
+
 def q_corpus_curation_v2(spark, sf_dir):
-    """Curation flow with the round-4 tiers composed in, as ONE plan:
-    URL-level dedup (canonicalized crawl variants collapse BEFORE any
-    content hashing — the cheapest tier runs first) → heuristic gate →
+    """Curation flow with the round-4 tiers composed in: URL-level
+    dedup (canonicalized crawl variants collapse BEFORE any content
+    hashing — the cheapest tier runs first) → heuristic gate →
     exact-dup reps → near-dup survivors → containment drop (quoted
-    subsets of surviving docs) → stratified sample → packing.  Every
-    stage reuses its registered operator; the oracle chains each
-    stage's own SQL formulation, so the seven-stage flow is
-    value-hash-checked end to end."""
-    return _v2_tail(_v2_reps(_t(spark, sf_dir, "documents")))
+    subsets of surviving docs) → stratified sample → packing, staged at
+    the representative table (_v2_staged).  Every stage reuses its
+    registered operator; the oracle chains each stage's own SQL
+    formulation, so the seven-stage flow is value-hash-checked end to
+    end."""
+    return _v2_staged(spark, sf_dir, _t(spark, sf_dir, "documents"), "v2_reps")
 
 
 def q_corpus_curation_v3(spark, sf_dir):
@@ -1198,24 +1214,7 @@ def q_corpus_curation_v3(spark, sf_dir):
     chain's first relation to the same dsel set."""
     sel = q_dsir_sample_docs(spark, sf_dir).select("doc_id")
     docs = _t(spark, sf_dir, "documents").join(sel, "doc_id")
-    return _v2_tail(_v2_reps(docs))
-
-
-def q_corpus_curation_v2_staged(spark, sf_dir):
-    """The PRODUCTION shape of the v2 flow (r4 verdict item 4): the
-    gated/exact-deduped representative table is MATERIALIZED once
-    (write → parquet scan — the write_filtered → read boundary the repo
-    documents as the production stage seam) and every downstream tier
-    reads the scan instead of recomputing the URL-canon + gate + window
-    chain per reference.  Output is identical to corpus_curation_v2 by
-    construction (same stages, same content-addressed fates), so it
-    shares the same oracle SQL verbatim; the A/B economics are recorded
-    in BENCH/ROUND5.md."""
-    from quality_filter.io import formats
-
-    path = formats.scratch_path("v2_reps", sf_dir)
-    _v2_reps(_t(spark, sf_dir, "documents")).write.mode("overwrite").parquet(path)
-    return _v2_tail(spark.read.parquet(path))
+    return _v2_staged(spark, sf_dir, docs, "v3_reps")
 
 
 def q_quality_contribs_docs(spark, sf_dir):
@@ -1317,17 +1316,6 @@ def q_near_dup_clusters(spark, sf_dir):
     closure — star vs clique edge sets have identical components."""
     bands = q_lsh_band_keys(spark, sf_dir)
     return dedup.near_dup_components(bands, "doc_id")
-
-
-def q_near_dup_clusters_labelprop(spark, sf_dir):
-    """The OTHER component algebra, driver-checked: min-label
-    propagation + pointer jumping (``connected_components``) over the
-    same star edges, against the same recursive-closure oracle —
-    alternating-star (the default) and label-propagation must land on
-    identical (doc, comp) labels."""
-    bands = q_lsh_band_keys(spark, sf_dir)
-    comp = dedup.connected_components(dedup.star_edges(bands, "doc_id"), "src", "dst")
-    return comp.select(F.col("x").alias("doc_id"), "comp")
 
 
 def q_near_dup_survivors(spark, sf_dir):
@@ -1591,9 +1579,8 @@ def q_semantic_decontamination(spark, sf_dir):
     embedding_near_dup_lsh scale path — a bucket equi-join, never
     train×bench all-pairs; recall < 1 by construction and the oracle
     applies the SAME bucket restriction, so the check is a full
-    value-hash match).  Completes the decontamination trio: exact
-    n-gram (benchmark_decontamination), Bloom-candidate scale twin
-    (…_bloom), and this semantic form."""
+    value-hash match).  The embedding-space complement of the exact
+    n-gram form (benchmark_decontamination)."""
     emb = _t(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").head()[0])
     planes = similarity.make_planes(dim, n_planes=3, seed=99)
@@ -2461,23 +2448,6 @@ def q_bm25_top_docs(spark, sf_dir):
     return textagg.bm25_topk(docs, "text", "doc_id", BM25_QUERY_TERMS, k=BM25_K)
 
 
-def q_bm25_indexed(spark, sf_dir):
-    """BM25 served from the materialized inverted index
-    (textagg.write_term_index → hive-partitioned postings by
-    term_bucket): the probe scan is pruned to the query terms' buckets
-    (PartitionFilters, plan-pinned in tests) and never re-reads the
-    corpus.  Float-identical to bm25_top_docs by construction (shared
-    score expression + exact-integer corpus stats), so it registers
-    against the SAME oracle SQL — the driver hash-checks that the
-    index path loses nothing."""
-    from quality_filter.io import formats
-
-    docs = _t(spark, sf_dir, "documents")
-    path = formats.scratch_path("termidx", sf_dir)
-    textagg.write_term_index(docs, "text", "doc_id", path)
-    return textagg.bm25_indexed(spark, path, "doc_id", BM25_QUERY_TERMS, k=BM25_K)
-
-
 BPE_PAIRS_K = 50
 
 
@@ -2665,8 +2635,8 @@ def q_host_trustrank(spark, sf_dir):
 
 def q_winnowing_survivors(spark, sf_dir):
     """The winnowing dedup tier end-to-end: fp candidate pairs →
-    connected components (min-label + pointer jumping, O(log diameter)
-    rounds) → one survivor per local-similarity cluster + all
+    connected components (alternating large/small-star, min-label) →
+    one survivor per local-similarity cluster + all
     unclustered docs.  The survivors verb near_dup_survivors already
     provides for the minhash tier, applied to the LOCAL-substring
     tier.  Edges require >= WINNOW_MIN_SHARED shared fingerprints (the
@@ -2675,7 +2645,7 @@ def q_winnowing_survivors(spark, sf_dir):
     into one giant component)."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.winnowing_pairs(docs, "text", "doc_id", max_df=WINNOW_MAX_DF)
-    comp = dedup.connected_components(
+    comp = dedup.connected_components_altstar(
         pairs.filter(F.col("n_shared") >= WINNOW_MIN_SHARED).select("doc_a", "doc_b"),
         src="doc_a",
         dst="doc_b",
@@ -3577,21 +3547,6 @@ def q_knn_join(spark, sf_dir):
     return similarity.knn_join(emb, "embedding", "vec_id", queries, k=5)
 
 
-def q_knn_join_broadcast(spark, sf_dir):
-    """Same result set as knn_join, but the query set rides as a
-    broadcast DataFrame through an equi-join on a chunk key
-    (BroadcastHashJoin + WindowGroupLimit) — the form that scales to
-    query sets too large to inline.  Shares knn_join's oracle SQL:
-    identical rows by construction (exact-fold pair kernel)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qdf = emb.filter(F.col("vec_id") < KNN_JOIN_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    return similarity.knn_join_broadcast(
-        emb, "embedding", "vec_id", qdf, k=5, n_chunks=2
-    )
-
-
 ANN_RECALL_QUERIES = 8
 ANN_RECALL_K = 10
 
@@ -3682,33 +3637,6 @@ def q_benchmark_decontamination(spark, sf_dir):
         "doc_id",
         F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
         (F.coalesce("n_hits", F.lit(0)) > 0).alias("contaminated"),
-    )
-
-
-DECONTAM_BLOOM_BITS = 1 << 18
-DECONTAM_BLOOM_HASHES = 5
-
-
-def q_benchmark_decontamination_bloom(spark, sf_dir):
-    """Bloom-candidate decontamination (round-3 verdict item 5):
-    BIT-IDENTICAL output to q_benchmark_decontamination, computed as a
-    distributed Bloom filter over the benchmark n-grams (only the bit
-    array ships, never the string set) → vectorized Arrow bit-probe →
-    exact verify join on the fpr-bounded candidate rows — the
-    candidates+rescore pattern from knn_join applied to set membership.
-    Same oracle SQL as the exact form (no false negatives)."""
-    from quality_filter.operators import decontam
-
-    docs = _t(spark, sf_dir, "documents")
-    ng = F.array_distinct(dedup.shingles(F.col("text"), DECONTAM_NGRAM))
-    bench = (
-        docs.filter(F.col("doc_id") % DECONTAM_MOD == 0)
-        .select(F.explode(ng).alias("ng"))
-        .distinct()
-    )
-    return decontam.decontaminate_bloom(
-        docs, ng, "doc_id", bench,
-        n_bits=DECONTAM_BLOOM_BITS, n_hashes=DECONTAM_BLOOM_HASHES,
     )
 
 
@@ -4144,18 +4072,18 @@ gated AS (
 fp AS (
   SELECT doc_id, text, lang, md5(lower(trim(text, ' '))) AS fpv FROM gated
 ),
-reps AS (
+reps AS MATERIALIZED (
   SELECT doc_id, text, lang FROM (
     SELECT *, min(doc_id) OVER (PARTITION BY fpv) AS rep FROM fp
   ) WHERE doc_id = rep
 ),
 {_components_ctes('reps')},
-survivors AS (
+survivors AS MATERIALIZED (
   SELECT * FROM reps
   WHERE doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> comp)
 ),
 {_containment_ctes('survivors')},
-kept2 AS (
+kept2 AS MATERIALIZED (
   SELECT * FROM survivors
   WHERE doc_id NOT IN (SELECT contained_id FROM contained)
 ),
@@ -5029,9 +4957,6 @@ FROM sh""",
         + "\nSELECT doc_id, shard, bin_idx, n_tokens FROM pack",
         "corpus_curation": _corpus_curation_sql(qz, hard_fail),
         "corpus_curation_v2": _corpus_curation_v2_sql(qz, hard_fail),
-        # the staged variant is output-identical by construction: same
-        # stages, same content-addressed fates — same oracle SQL verbatim
-        "corpus_curation_v2_staged": _corpus_curation_v2_sql(qz, hard_fail),
         "corpus_curation_v3": _corpus_curation_v2_sql(
             qz, hard_fail,
             pre_ctes=_dsir_selection_ctes(),
@@ -5541,8 +5466,6 @@ SELECT vec_id,
 FROM embeddings, q
 ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""",
     }
-    # broadcast form is row-identical to the literal form by construction
-    out["knn_join_broadcast"] = out["knn_join"]
     out["embedding_centroids_by_label"] = f"""
 WITH pos AS (SELECT unnest(range({_embedding_dim()})) AS i)
 SELECT CAST(e.label AS BIGINT) AS label, CAST(pos.i AS BIGINT) AS pos,
@@ -5584,9 +5507,6 @@ hits AS (
 SELECT d.doc_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
   coalesce(h.n_hits, 0) > 0 AS contaminated
 FROM documents d LEFT JOIN hits h USING (doc_id)"""
-    # Bloom candidates + exact verify has no false negatives, so its
-    # output equals the exact form's — same oracle SQL by construction
-    out["benchmark_decontamination_bloom"] = out["benchmark_decontamination"]
     # tau=0.5 only: sqrt chain is IEEE-correctly-rounded in both engines,
     # so thresholds (and therefore the kept row set) match bit-exactly —
     # see sampling.temperature_mixture_rates
@@ -5625,7 +5545,6 @@ tot AS (
 SELECT source, n_docs,
   round(least(1.0, (total / ns) / CAST(n_docs AS DOUBLE)), 6) AS rate
 FROM counts, tot"""
-    out["near_dup_clusters_labelprop"] = out["near_dup_clusters"]
     _dfeats = {
         "bias": "1.0", "stop": "stopword_ratio", "sym": "symbol_ratio",
         "dist": "distinct_ratio", "len": "length_norm",
@@ -5954,7 +5873,6 @@ piv AS (
 tot AS (SELECT doc_id, matched, {_bm_tot} AS score FROM piv)
 SELECT doc_id, round(score, 6) AS bm25, matched FROM tot
 ORDER BY score DESC, doc_id ASC LIMIT {BM25_K}"""
-    out["bm25_indexed"] = out["bm25_top_docs"]
     _win_w = dedup.WINNOW_W
     _win_ctes = f"""wsh AS (SELECT doc_id, {_ngram_expr_n(dedup.WINNOW_K)} AS ng FROM documents),
 wh AS (

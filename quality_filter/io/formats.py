@@ -41,6 +41,13 @@ CSV_OPTIONS = {
     "header": "true", "quote": '"', "escape": '"', "multiLine": "true",
     "ignoreLeadingWhiteSpace": "false", "ignoreTrailingWhiteSpace": "false",
 }
+# Read-side NULL sentinel.  The writer emits NULL as an unquoted empty
+# field and "" as a quoted one ('""'); the reader hands the unquoted
+# empty field back as ``nullValue``, and Spark then maps that string to
+# NULL.  The default nullValue is "", which turns '""' into NULL too;
+# with emptyValue="" and a non-empty sentinel both survive.  The cost:
+# a value exactly equal to the sentinel also reads back as NULL.
+CSV_NULL_SENTINEL = "\\N"
 
 DOCUMENTS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -68,7 +75,9 @@ def roundtrip_jsonl(df: DataFrame, spark: SparkSession, path: str,
 def roundtrip_csv(df: DataFrame, spark: SparkSession, path: str,
                   schema: T.StructType) -> DataFrame:
     """Write ``df`` as RFC-4180 CSV and read it back with the explicit
-    schema in FAILFAST mode (multiLine tolerates quoted newlines)."""
+    schema in FAILFAST mode (multiLine tolerates quoted newlines).  ""
+    and NULL stay distinct; a value equal to ``CSV_NULL_SENTINEL``
+    reads back as NULL."""
     (
         df.select(*[f.name for f in schema.fields])
         .write.mode("overwrite").options(**CSV_OPTIONS).csv(path)
@@ -76,7 +85,7 @@ def roundtrip_csv(df: DataFrame, spark: SparkSession, path: str,
     return (
         spark.read.schema(schema)
         .options(**CSV_OPTIONS)
-        .option("mode", "FAILFAST")
+        .options(mode="FAILFAST", emptyValue="", nullValue=CSV_NULL_SENTINEL)
         .csv(path)
     )
 

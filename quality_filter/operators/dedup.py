@@ -477,72 +477,14 @@ def _truncate_lineage(df: DataFrame, eager: bool, reliable: bool | None) -> Data
     return df.localCheckpoint(eager=eager)
 
 
-def connected_components(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iters: int = 25,
-    reliable_checkpoint: bool | None = None,
-) -> DataFrame:
-    """Connected components by min-label propagation to fixpoint:
-    comp(x) = min id reachable from x (including x).  Returns
-    (node, comp) for every node incident to an edge.
-
-    Each iteration: neighbor-min propagation (one join + one
-    partial-aggregated min) followed by POINTER JUMPING — comp(x) :=
-    comp(comp(x)) — which halves label-chain depth every round, so
-    convergence is O(log diameter), not O(diameter) (a 4097-node path
-    converges in 12 rounds, pinned by test).  Lineage is truncated per
-    iteration (localCheckpoint) so the plan doesn't grow with the
-    loop; each round is a bounded number of shuffles on the node id."""
-    und = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .union(edges.select(F.col(dst).alias("x"), F.col(src).alias("y")))
-        .distinct()
-    )
-    # materialize the edge list ONCE: it is re-read every iteration, and
-    # leaving it lazy re-runs the whole upstream plan (minhash signature,
-    # banding, ...) per round — measured 3x on the survivors query
-    und = _truncate_lineage(und, eager=True, reliable=reliable_checkpoint)
-    labels = und.select("x").distinct().select("x", F.col("x").alias("comp"))
-    for _ in range(max_iters):
-        nbr = (
-            und.join(
-                labels.select(F.col("x").alias("y"), F.col("comp").alias("ycomp")), "y"
-            )
-            .groupBy("x")
-            .agg(F.min("ycomp").alias("nbr_min"))
-        )
-        stepped = labels.join(nbr, "x", "left").select(
-            "x",
-            F.least(F.col("comp"), F.coalesce("nbr_min", F.col("comp"))).alias("comp"),
-            F.col("comp").alias("_old"),
-        )
-        # pointer jumping: follow the label one hop (comp := comp(comp))
-        # — min-labels only move one edge per propagation round, but
-        # label CHAINS can be followed transitively for free
-        lut = stepped.select(F.col("x").alias("comp"), F.col("comp").alias("_jump"))
-        proposed = (
-            stepped.join(lut, "comp", "left")
-            .select(
-                "x",
-                F.least(F.col("comp"), F.coalesce("_jump", F.col("comp"))).alias("comp"),
-                "_old",
-            )
-        )
-        proposed = _truncate_lineage(proposed, eager=True, reliable=reliable_checkpoint)
-        changed = proposed.filter(F.col("comp") < F.col("_old")).count()
-        labels = proposed.drop("_old")
-        if changed == 0:
-            break
-    return labels
-
-
 def connected_components_altstar(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iters: int = 25,
     reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Connected components by ALTERNATING large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    same (node, comp=min reachable id) contract as
-    ``connected_components``, different iteration algebra:
+    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
+    comp(x) = min id reachable from x (including x), returned as
+    (x, comp) for every node incident to a non-loop edge.
 
       large-star(u): every neighbor v > u re-links to
                      m = min(Γ(u) ∪ {u});
@@ -553,10 +495,11 @@ def connected_components_altstar(
     round both contracts label chains (like pointer jumping) AND shrinks
     the edge set toward the final star form, so on adversarial long
     chains it needs fewer rounds and moves less data per round than
-    label-propagation + pointer jumping (A/B'd on a 100k path+star mix;
-    see tests).  Convergence = edge set is a fixpoint of both steps,
-    detected by (count, order-free checksum) stability — one cheap
-    aggregate per round instead of a set-difference join.
+    label-propagation + pointer jumping (12.1 s vs 13.9 s on a 100k
+    path+star mix; BENCH/PLANS.md, near_dup_clusters_labelprop).
+    Convergence = edge set is a fixpoint of both steps, detected by
+    (count, order-free checksum) stability — one cheap aggregate per
+    round instead of a set-difference join.
 
     Each round is 3 partial-aggregated shuffles on node ids; lineage is
     truncated per round via LAZY localCheckpoint — the fixpoint
@@ -625,10 +568,9 @@ def connected_components_altstar(
 
 def near_dup_components(bands: DataFrame, id_col: str) -> DataFrame:
     """(id, comp) for every doc in a near-dup cluster: star edges from
-    band collisions → min-label components (alternating-star algorithm;
-    ``connected_components`` is the label-propagation twin — identical
-    output, pinned by differential test).  comp = the cluster's min
-    doc id (its representative/survivor)."""
+    band collisions → min-label components (alternating-star
+    algorithm).  comp = the cluster's min doc id (its
+    representative/survivor)."""
     comp = connected_components_altstar(star_edges(bands, id_col), "src", "dst")
     return comp.select(F.col("x").alias(id_col), "comp")
 

@@ -73,7 +73,7 @@ def pagerank(
     total collapse; see module docstring for the bound discussion).
 
     ``reliable_checkpoint`` selects the loop-invariant materialization
-    mode exactly as in ``dedup.connected_components`` (None = reliable
+    mode exactly as in ``dedup.connected_components_altstar`` (None = reliable
     iff a checkpoint dir is configured).  The per-round plan then grows
     only by one join+agg over the truncated state — linear in
     ``iters``, with no repeated source scans.
@@ -85,7 +85,7 @@ def pagerank(
     )
     outw = e.groupBy("_s").agg(F.sum("_w").alias("_ow"))
     # Materialize the loop-invariant state ONCE (same checkpoint seam as
-    # connected_components): without this every round's lineage re-derives
+    # connected_components_altstar): without this every round's lineage re-derives
     # the edge list from the source scan — K full corpus re-reads at scale.
     fact = _truncate_lineage(e.join(outw, "_s"), eager=False, reliable=reliable_checkpoint)
     nodes = _truncate_lineage(

@@ -417,63 +417,6 @@ def _knn_join_blas(
     )
 
 
-def knn_join_broadcast(
-    df: DataFrame, vec_col: str, id_col: str, queries_df: DataFrame,
-    query_id_col: str = "query_id", query_vec_col: str = "qv",
-    k: int = 10, n_chunks: int = 1,
-) -> DataFrame:
-    """Exact batch KNN join with the query set as a BROADCAST DataFrame —
-    the scale path when the query set is too large to inline as plan
-    literals or closure constants (knn_join's O(Q·dim) plan/closure size
-    degenerates for thousands of queries; a DataFrame ships once per
-    executor as a broadcast variable).
-
-    Shape: queries get a chunk key (pmod of an engine hash — chunk
-    membership never affects results, only physical batching), the
-    corpus side explodes the chunk domain, and the join is an EQUI-join
-    on the chunk key → BroadcastHashJoin, never a nested-loop/cartesian
-    node.  Cosine runs through the exact-fold pair kernel, so every
-    (query, id, cos_sim) float is bit-identical to knn_join's.  The
-    per-query top-k is a rank-limited window (WindowGroupLimit pushes
-    the limit below the exchange: tasks emit only per-query heads).
-
-    n_chunks > 1 bounds how many queries each joined row batch carries
-    (corpus rows replicate per chunk, each copy meeting 1/n_chunks of
-    the queries) — the knob for very wide query sets where a single
-    hash bucket row-batch would be too fat.
-
-    Perf note (measured, BENCH/ROUND3.md): both vectors ride every
-    joined row through Arrow here, so for raw throughput knn_join's
-    BLAS candidate path wins (1.43s vs 18.6s at Q=2000); this form's
-    value is the equi-join plan shape and query sets too large for a
-    task closure."""
-    from pyspark.sql import Window as W
-
-    q = queries_df.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("_qv"),
-        F.pmod(F.hash(query_id_col), F.lit(n_chunks)).cast("int").alias("_chunk"),
-    )
-    corpus = df.select(
-        F.col(id_col),
-        F.col(vec_col).alias("_v"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("_chunk"),
-    )
-    scored = corpus.join(F.broadcast(q), "_chunk").select(
-        "query_id",
-        F.col(id_col),
-        F.round(cosine_pair_col(F.col("_v"), F.col("_qv")), 6).alias("cos_sim"),
-    ).filter(F.col("cos_sim").isNotNull() & ~F.isnan("cos_sim"))  # zero-norm rows excluded, matching knn_join
-    rn = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    )
-    return (
-        scored.withColumn("rank", rn)
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "cos_sim", F.col("rank").cast("long").alias("rank"))
-    )
-
-
 def make_planes(dim: int, n_planes: int, seed: int = 1234) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes (no RNG state dependence)."""
     import numpy as np

@@ -87,39 +87,6 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def _bm25_score_col(tf, dl, df, nd: float, avgdl: float, k1: float, b: float):
-    """The BM25 per-(doc, term) score as ONE shared expression tree —
-    used by both the direct scan (bm25_topk) and the materialized-index
-    probe (bm25_indexed) so the two paths are float-identical by
-    construction (and both match the DuckDB oracle's spelling)."""
-    return F.log((F.lit(nd) - df + 0.5) / (df + 0.5) + 1.0) * (
-        (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dl / F.lit(avgdl)))
-    )
-
-
-def _bm25_rank(scored, id_col: str, terms: list[str], k: int):
-    """Pivot per-term scores to fixed columns, add in sorted-term order
-    (determinism seam — never a float SUM over shuffle-ordered rows),
-    take top-k via TakeOrderedAndProject."""
-    pivoted = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("matched"),
-        *[
-            F.max(F.when(F.col("term") == t, F.col("_s"))).alias(f"_s{i}")
-            for i, t in enumerate(terms)
-        ],
-    )
-    total = None
-    for i in range(len(terms)):
-        piece = F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
-        total = piece if total is None else total + piece
-    return (
-        pivoted.withColumn("_score", total)
-        .orderBy(F.col("_score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, F.round("_score", 6).alias("bm25"), "matched")
-    )
-
-
 def bm25_topk(
     df: DataFrame, text_col: str, id_col: str, query_terms: list[str],
     k: int = 10, k1: float = BM25_K1, b: float = BM25_B,
@@ -164,91 +131,28 @@ def bm25_topk(
         occ.select(F.col(id_col), F.col("term")).distinct()
         .groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
     )
-    scored = tf.join(F.broadcast(dfreq), "term").withColumn(
-        "_s",
-        _bm25_score_col(
-            F.col("tf"), F.col("dl"), F.col("df"), float(n_docs), avgdl, k1, b
-        ),
+    tfc, dl, dfc = F.col("tf"), F.col("dl"), F.col("df")
+    score = F.log((F.lit(float(n_docs)) - dfc + 0.5) / (dfc + 0.5) + 1.0) * (
+        (tfc * (k1 + 1.0)) / (tfc + k1 * ((1.0 - b) + b * dl / F.lit(avgdl)))
     )
-    return _bm25_rank(scored, id_col, terms, k)
-
-
-TERM_INDEX_BUCKETS = 16
-
-
-def write_term_index(
-    df: DataFrame, text_col: str, id_col: str, path: str,
-    n_buckets: int = TERM_INDEX_BUCKETS,
-) -> None:
-    """Materialize an inverted index: postings ``(term, id, tf, dl)``
-    hive-partitioned by ``term_bucket = md5(term) % n_buckets``, plus a
-    one-row ``_stats`` table (n_docs, total_tokens).
-
-    The write_ivf_index / write_band_index pattern applied to lexical
-    retrieval: the corpus pays the explode+aggregate ONCE at ingest;
-    every subsequent query prunes the scan to the |Q| buckets of its
-    own terms (PartitionFilters at the source — plan-pinned in tests).
-    At web scale, size n_buckets so a bucket's postings fit a scan
-    split comfortably; df-capped stopword pruning can bound the fattest
-    postings lists the same way the LSH hot-band cap does."""
-    from quality_filter.operators.sampling import hash_bucket
-
-    base = df.select(
-        F.col(id_col), _tokens_lower(F.col(text_col)).alias("_t")
-    ).select(F.col(id_col), F.col("_t"), F.size("_t").cast("long").alias("dl"))
-    postings = (
-        base.select(F.col(id_col), F.col("dl"), F.explode("_t").alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"), F.max("dl").alias("dl"))
-        .withColumn("term_bucket", (hash_bucket(F.col("term")) % n_buckets).cast("int"))
+    scored = tf.join(F.broadcast(dfreq), "term").withColumn("_s", score)
+    pivoted = scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("long").alias("matched"),
+        *[
+            F.max(F.when(F.col("term") == t, F.col("_s"))).alias(f"_s{i}")
+            for i, t in enumerate(terms)
+        ],
     )
-    postings.write.mode("overwrite").partitionBy("term_bucket").parquet(path)
-    stats = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
+    total = None
+    for i in range(len(terms)):
+        piece = F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
+        total = piece if total is None else total + piece
+    return (
+        pivoted.withColumn("_score", total)
+        .orderBy(F.col("_score").desc(), F.col(id_col).asc())
+        .limit(k)
+        .select(id_col, F.round("_score", 6).alias("bm25"), "matched")
     )
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}_stats")
-
-
-def bm25_indexed(
-    spark, path: str, id_col: str, query_terms: list[str], k: int = 10,
-    k1: float = BM25_K1, b: float = BM25_B,
-    n_buckets: int = TERM_INDEX_BUCKETS,
-) -> DataFrame:
-    """BM25 top-k served from the materialized term index: the postings
-    scan is pruned to the query terms' buckets (PartitionFilters — no
-    full-corpus read), df comes from a per-term count over the pruned
-    postings, corpus stats from the one-row ``_stats`` table.  Scores
-    are float-identical to ``bm25_topk`` by construction (shared
-    ``_bm25_score_col`` expression, same exact-integer nd/avgdl)."""
-    import hashlib
-
-    terms = sorted(query_terms)
-    srow = spark.read.parquet(f"{path}_stats").first()
-    n_docs, total_tokens = srow["n_docs"], srow["total_tokens"]
-    if not n_docs:
-        n_docs, total_tokens = 1, 1
-    avgdl = total_tokens / n_docs
-    buckets = sorted({
-        int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % n_buckets for t in terms
-    })
-    post = (
-        spark.read.parquet(path)
-        .filter(F.col("term_bucket").isin(buckets))  # -> PartitionFilters
-        .filter(F.col("term").isin(terms))
-        .select(id_col, "term", F.col("tf").cast("double").alias("tf"),
-                F.col("dl").cast("double").alias("dl"))
-    )
-    dfreq = post.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("df")
-    )
-    scored = post.join(F.broadcast(dfreq), "term").withColumn(
-        "_s",
-        _bm25_score_col(
-            F.col("tf"), F.col("dl"), F.col("df"), float(n_docs), avgdl, k1, b
-        ),
-    )
-    return _bm25_rank(scored, id_col, terms, k)
 
 
 def bpe_pair_counts(df: DataFrame, text_col: str, k: int = 50) -> DataFrame:

@@ -2,27 +2,23 @@
 
 r4 verdict item 4: the composed gate→segment-dedup shape recomputes the
 Arrow scoring stage when its output feeds two differently-keyed
-aggregations (measured in the 10M soak, BENCH/ROUND4.md); the composed
-corpus_curation_v2 similarly recomputes the URL-canon + gate + window
-chain once per downstream reference.  The production shape materializes
-the gated table once (write → parquet scan — the write_filtered
-boundary) and pays one scoring pass plus one scan.
+aggregations (measured in the 10M soak, BENCH/ROUND4.md).  The
+production shape materializes the gated table once (write → parquet
+scan — the write_filtered boundary) and pays one scoring pass plus one
+scan.
 
-Two A/Bs, each alternating composed/staged twice (best-of-2, the VM
-drift discipline):
+Arrow-scored gate → segment_dedup over bench pages (1M rows, cached
+parquet input), alternating composed/staged twice (best-of-2, the VM
+drift discipline): composed (tiered_scored inline, scoring recomputed
+per aggregation key) vs staged (gated table written once, dedup reads
+the scan).  Asserts identical kept-segment totals AND that the staged
+dedup job's executed plan contains ZERO ArrowEvalPython nodes (the one
+scoring pass happened in the write job — plan-evidenced, not assumed),
+while the composed job's plan contains >= 2 (the recompute being paid).
 
-  A. Arrow-scored gate → segment_dedup over bench pages (1M rows,
-     cached parquet input): composed (tiered_scored inline, scoring
-     recomputed per aggregation key) vs staged (gated table written
-     once, dedup reads the scan).  Asserts identical kept-segment
-     totals AND that the staged dedup job's executed plan contains ZERO
-     ArrowEvalPython nodes (the one scoring pass happened in the write
-     job — plan-evidenced, not assumed), while the composed job's plan
-     contains >= 2 (the recompute being paid).
-
-  B. corpus_curation_v2 vs corpus_curation_v2_staged at sf0.1
-     (registered queries, same oracle SQL).  Asserts identical packed
-     output rows.
+The registered corpus_curation_v2/_v3 queries are staged the same way
+(__spark_entry__._v2_staged); their composed-plan numbers are in
+BENCH/ROUND5.md.
 
 Run exclusively (no concurrent Spark).
 Usage: PYTHONPATH=/root/repo python scripts/ab_staged_curation.py
@@ -38,7 +34,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 STAGE_PATH = "/tmp/qf_ab_staged_gated"
 
 
@@ -49,7 +44,6 @@ def _executed_plan(df) -> str:
 def main() -> int:
     from pyspark.sql import functions as F
 
-    import __spark_entry__ as E
     from bench import ensure_pages
 
     from quality_filter.operators import dedup
@@ -58,7 +52,6 @@ def main() -> int:
 
     spark = get_spark(app_name="qf-ab-staged")
 
-    # ---- A: Arrow-scored gate -> segment dedup ------------------------
     pages = spark.read.parquet(ensure_pages(spark, 10))  # 1M rows
     tiered_scored(pages).write.format("noop").mode("overwrite").save()  # warm
 
@@ -112,29 +105,10 @@ def main() -> int:
         f"{n_arrow_composed} ArrowEvalPython nodes"
     )
     print(
-        f"A. gate->segdedup 1M rows: composed best-of-2 "
+        f"gate->segdedup 1M rows: composed best-of-2 "
         f"{min(walls['composed']):.1f}s ({n_arrow_composed} ArrowEvalPython) "
         f"vs staged {min(walls['staged']):.1f}s (0 ArrowEvalPython in the "
         f"dedup job; kept={kept_vals['staged']:,})",
-        flush=True,
-    )
-
-    # ---- B: corpus_curation_v2 composed vs staged at sf0.1 ------------
-    wallsB = {"v2": [], "v2_staged": []}
-    rows = {}
-    for _ in range(2):
-        for name in ("v2", "v2_staged"):
-            q = "corpus_curation_v2" if name == "v2" else "corpus_curation_v2_staged"
-            t0 = time.perf_counter()
-            out = sorted(map(tuple, E.queries()[q](spark, SF_DIR).collect()))
-            wallsB[name].append(time.perf_counter() - t0)
-            rows.setdefault(name, out)
-            assert out == rows[name], f"{name} output drifted across reps"
-    assert rows["v2"] == rows["v2_staged"], "staged v2 output != composed v2"
-    print(
-        f"B. corpus_curation_v2 sf0.1: composed best-of-2 "
-        f"{min(wallsB['v2']):.1f}s vs staged {min(wallsB['v2_staged']):.1f}s "
-        f"({len(rows['v2'])} identical packed rows)",
         flush=True,
     )
 

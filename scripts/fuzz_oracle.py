@@ -63,8 +63,9 @@ FUZZ_EXCLUDED: dict[str, str] = {
         "-1278740/40/1e6 -> -0.031969 vs -0.031968)"
     ),
     "csv_roundtrip_stats": (
-        "the CSV reader returns an empty-string text as NULL, so fuzzed empty "
-        "docs change the row-image checksum (seeds 2 and 3)"
+        "a value equal to the CSV read-side NULL sentinel (formats."
+        "CSV_NULL_SENTINEL) reads back as NULL and changes the row-image "
+        "checksum; tests/test_formats.py pins the collision"
     ),
 }
 

@@ -35,14 +35,21 @@ def test_adversarial_roundtrip_byte_identical(spark, adv_df, fmt, tmp_path):
     fn = formats.roundtrip_jsonl if fmt == "jsonl" else formats.roundtrip_csv
     rt = fn(adv_df, spark, str(tmp_path / fmt), formats.DOCUMENTS_SCHEMA)
     got = {r["doc_id"]: r["text"] for r in rt.collect()}
-    want = {i: t for i, t in enumerate(ADVERSARIAL_TEXTS)}
-    if fmt == "csv":
-        # CSV cannot distinguish empty string from NULL on read (the
-        # format has one encoding for both) — the one documented lossy
-        # cell; JSONL keeps it.  Normalize for the comparison.
-        want = {i: t for i, t in want.items() if t != ""}
-        got = {i: t for i, t in got.items() if t is not None}
-    assert got == want
+    assert got == dict(enumerate(ADVERSARIAL_TEXTS))
+
+
+def test_csv_roundtrip_keeps_empty_string_distinct_from_null(spark, tmp_path):
+    """CSV writes NULL as an unquoted empty field and "" as '""'; the
+    reader keeps them apart.  The one lossy value is the read-side NULL
+    sentinel itself, which comes back as NULL."""
+    texts = ["", None, " ", '""', formats.CSV_NULL_SENTINEL]
+    df = spark.createDataFrame(
+        [(i, t, "en", None, 0) for i, t in enumerate(texts)],
+        schema=formats.DOCUMENTS_SCHEMA,
+    )
+    rt = formats.roundtrip_csv(df, spark, str(tmp_path / "csv"), formats.DOCUMENTS_SCHEMA)
+    got = {r["doc_id"]: (r["text"], r["source"]) for r in rt.collect()}
+    assert got == {i: (t, None) for i, t in enumerate(texts[:-1])} | {4: (None, None)}
 
 
 def test_fidelity_summary_catches_single_byte_mutation(spark, adv_df):

@@ -128,22 +128,6 @@ def test_bm25_top_docs_query_green_shapes(spark, docs):
     assert all(1 <= r["matched"] <= len(E.BM25_QUERY_TERMS) for r in out)
 
 
-def test_bm25_indexed_identical_to_direct_and_partition_pruned(spark, docs, tmp_path):
-    terms = ["hash", "spark", "table"]
-    path = str(tmp_path / "termidx")
-    textagg.write_term_index(docs, "text", "doc_id", path)
-    direct = textagg.bm25_topk(docs, "text", "doc_id", terms, k=10)
-    probe = textagg.bm25_indexed(spark, path, "doc_id", terms, k=10)
-    assert sorted(map(tuple, direct.collect())) == sorted(map(tuple, probe.collect()))
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    # the postings scan must be pruned to the query terms' buckets
-    assert "PartitionFilters" in plan and "term_bucket" in plan
-    import re
-
-    pf = re.search(r"PartitionFilters: \[([^\]]*term_bucket[^\]]*)\]", plan)
-    assert pf, plan[:2000]
-
-
 def test_langid_confusion_conserves_docs(spark, docs):
     import __spark_entry__ as E
 
