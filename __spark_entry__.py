@@ -535,6 +535,7 @@ def q_quality_score_histogram(spark, sf_dir):
         .groupBy("bin")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
+    # unpartitioned on purpose: one row per score bin (N_SCORE_BINS rows)
     w = Window.orderBy(F.desc("bin")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return hist.select(
         "bin",
@@ -576,6 +577,7 @@ def q_score_drift_psi(spark, sf_dir):
         F.coalesce("n_old", F.lit(0).cast("long")).alias("n_old"),
         F.coalesce("n_new", F.lit(0).cast("long")).alias("n_new"),
     )
+    # unpartitioned on purpose: one row per score bin (N_SCORE_BINS rows)
     w = Window.partitionBy()
     t = j.select(
         "bin", "n_old", "n_new",
@@ -861,6 +863,7 @@ def q_corpus_token_budget(spark, sf_dir):
         F.sum(TS.token_count_bpe(F.col("text"))).cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_docs"),
     )
+    # unpartitioned on purpose: one row per source (dimension-sized)
     w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return per.select(
         "source", "n_docs", "n_tokens",
@@ -1729,6 +1732,8 @@ def q_doc_quality_deciles(spark, sf_dir):
     feats = R.feature_columns(F.col("text"), CFG)
     feats["ppl_norm"] = F.lit(0.0)
     q = F.round(R.quality_score_col(feats, CFG), 6)
+    # unbounded by design: the exact test-scale form (global ranks);
+    # doc_quality_decile_bounds is the corpus-scale form
     w = Window.orderBy(q.desc(), F.col("doc_id").asc())
     return docs.select(
         "doc_id",
@@ -1905,111 +1910,6 @@ def q_embedding_near_dup_pairs(spark, sf_dir):
     recall<1 alternative."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.blocked_all_pairs(emb, "embedding", "vec_id", 0.46, n_blocks=8)
-
-
-MEDIA_ND_GROUPS = 12
-MEDIA_ND_SEED = 23
-MEDIA_ND_PLANES = 8
-
-
-def q_media_near_dup(spark, sf_dir):
-    """Composed multimodal → ANN pipeline (round-3 verdict item 4):
-    deterministic near-duplicate image corpus → REAL pixel decode +
-    featurize in executors (mapInPandas over the pure-numpy codecs;
-    the reference's decode→score path, _inference.py:64-84) →
-    hyperplane-LSH buckets over the DECODED features → near-dup pairs
-    via a bucket EQUI-join (never a cartesian).  Lossless re-encodes
-    (PPM/PNG/BMP of one base image) decode to identical pixels →
-    identical features → guaranteed same-bucket pairs; the JPEG
-    variant is the realistic lossy near-dup.  The DuckDB oracle's
-    engine-free twin re-decodes the same corpus driver-side with the
-    same codecs and exact-fold sign bits (train_ivf_centroids_local
-    pattern), so the hash check pins the full
-    decode→feature→bucket→pair composition.  sf_dir unused: the corpus
-    is generated, not read (media is not a driver table)."""
-    from quality_filter.operators import multimodal as M
-
-    pdf = M.generate_near_dup_media(MEDIA_ND_GROUPS, seed=MEDIA_ND_SEED)
-    sdf = spark.createDataFrame(pdf, schema=M.MEDIA_SCHEMA)
-    # center the [0,1] features before hashing: uncentered, every image
-    # sits in the all-positive orthant and random hyperplanes assign one
-    # bucket to the whole corpus (the pair join degenerates quadratic)
-    return _media_pairs_tail(sdf)
-
-
-def _media_pairs_tail(sdf):
-    """decode → center → hyperplane buckets → bucket-equi-join pairs:
-    the shared tail of media_near_dup and crawl_media_near_dup (both
-    feed the same frozen planes, so identical payload bytes produce
-    identical pairs — the crawl variant's oracle is the same VALUES
-    twin verbatim)."""
-    from quality_filter.operators import multimodal as M
-
-    # center the [0,1] features before hashing: uncentered, every image
-    # sits in the all-positive orthant and random hyperplanes assign one
-    # bucket to the whole corpus (the pair join degenerates quadratic)
-    feats = M.decode_features(sdf).filter(F.col("decode_ok")).select(
-        "media_id",
-        F.transform("features", lambda x: x.cast("double") - 0.5).alias("cfeat"),
-    )
-    planes = similarity.make_planes(
-        M.IMAGE_FEATURE_DIM, MEDIA_ND_PLANES, seed=MEDIA_ND_SEED
-    )
-    buckets = similarity.hyperplane_lsh_buckets(feats, "cfeat", "media_id", planes)
-    a = buckets.select(F.col("media_id").alias("id_a"), "bucket")
-    b = buckets.select(F.col("media_id").alias("id_b"), "bucket")
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "bucket")
-    )
-
-
-def q_crawl_media_near_dup(spark, sf_dir):
-    """The full CC-style crawl-to-ANN story in ONE query (r4 verdict
-    item 6): the near-dup media corpus captured as WARC **response**
-    records (payload = raw image bytes, media id as an X- header, plus
-    one non-image decoy capture) → strict length-framed parse
-    (io/warc.py, one task per file) → JVM-native magic-byte sniff
-    routes image/* payloads to the decoder and drops the decoy →
-    decode → featurize → hyperplane LSH → bucket-equi-join pairs.
-    Payloads round-trip WARC byte-identically, so the pair set equals
-    media_near_dup's and the oracle is the same engine-free VALUES
-    twin verbatim — the hash check therefore pins the WARC capture +
-    parse + sniff legs too."""
-    from quality_filter.io import fetch, formats
-    from quality_filter.io import warc as W
-    from quality_filter.operators import multimodal as M
-
-    pdf = M.generate_near_dup_media(MEDIA_ND_GROUPS, seed=MEDIA_ND_SEED)
-    sdf = spark.createDataFrame(pdf, schema=M.MEDIA_SCHEMA)
-    captures = sdf.select(
-        "media_id", "url",
-        F.lit("2024-01-01T00:00:00Z").alias("warc_date"),
-        "payload",
-    ).unionByName(
-        # a text capture the sniff gate must drop (ids disjoint from the
-        # media universe, so a gate failure would poison the pair hash)
-        spark.range(1).select(
-            F.lit(10**9).alias("media_id"),
-            F.lit("https://imgs.example.com/robots.txt").alias("url"),
-            F.lit("2024-01-01T00:00:00Z").alias("warc_date"),
-            F.lit(bytearray(b"User-agent: *\nDisallow:")).alias("payload"),
-        )
-    )
-    path = formats.scratch_path("crawl_media", sf_dir)
-    W.write_warc(captures, path, rec_type="response", header_cols=("media_id",))
-    rt = W.read_warc(spark, path, require_type="response")
-    imgs = (
-        rt.select(
-            F.col("headers").getItem("x-media-id").cast("long").alias("media_id"),
-            fetch.sniff_content_type_col(F.col("payload")).alias("_ctype"),
-            "payload",
-        )
-        .filter(F.col("_ctype").startswith("image/"))
-        .select("media_id", F.lit("image").alias("kind"), "payload")
-    )
-    return _media_pairs_tail(imgs)
 
 
 def _pii_aug_col():
@@ -2690,9 +2590,9 @@ ANCHOR_TERMS_K = 50
 
 def _ol_pages(docs):
     """Deterministic synthetic crawled-page relation for the outlink
-    tier (documents carry no html column — the media_near_dup pattern):
-    each doc becomes a page on host ``doc_id % OL_HOSTS`` whose html
-    embeds (a) two relative nav links, (b) two absolute links to
+    tier (documents carry no html column, so each engine derives the
+    pages from them): each doc becomes a page on host
+    ``doc_id % OL_HOSTS`` whose html embeds (a) two relative nav links, (b) two absolute links to
     md5-universe target hosts with anchor text from the doc's own
     tokens (one https://, one scheme-relative //), (c) one opaque
     mailto: link, and (d) for ~1/OL_NOINDEX_MOD of pages a
@@ -3420,16 +3320,15 @@ def _sample_centroids(spark, sf_dir):
 
 def q_kmeans_step(spark, sf_dir):
     """One EXACT distributed Lloyd accumulation over the full corpus:
-    per (cluster, dim), member count, the order-free integerized
-    component sum (floor(x*1e6), DECIMAL upstream), and the implied
-    mean — the k-means update as a value-hash-checkable aggregate.
-    See similarity.kmeans_step_stats for the scale shape."""
+    per (cluster, dim), member count and the order-free integerized
+    component sum (floor(x*1e6), DECIMAL upstream) — the k-means update
+    as a value-hash-checkable aggregate of exact integers; the mean is
+    sum_micro / n / 1e6.  See similarity.kmeans_step_stats for the
+    scale shape."""
     emb, cents = _sample_centroids(spark, sf_dir)
-    s = similarity.kmeans_step_stats(emb, "embedding", cents)
-    mean_val = F.round(
-        F.col("sum_micro").cast("double") / F.col("n") / F.lit(1000000.0), 6
+    return similarity.kmeans_step_stats(emb, "embedding", cents).select(
+        "cluster", "dim", "n", "sum_micro"
     )
-    return s.select("cluster", "dim", "n", "sum_micro", mean_val.alias("mean_val"))
 
 
 def q_kmeans_refined_clusters(spark, sf_dir):
@@ -3741,6 +3640,7 @@ def q_source_mixing_rates(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    # unpartitioned on purpose: one row per source (dimension-sized)
     w = Window.partitionBy()
     total = F.sum("n_docs").over(w)
     n_sources = F.count(F.lit(1)).over(w)
@@ -4555,8 +4455,7 @@ cells AS (
   FROM ex
 )
 SELECT cluster, dim, CAST(count(*) AS BIGINT) AS n,
-  CAST(sum(xm) AS BIGINT) AS sum_micro,
-  round(CAST(sum(xm) AS DOUBLE) / count(*) / 1000000.0, 6) AS mean_val
+  CAST(sum(xm) AS BIGINT) AS sum_micro
 FROM cells GROUP BY cluster, dim"""
 
 
@@ -4606,35 +4505,6 @@ _SPACE_TRIM = "trim(text, ' ')"
 _TOKS = f"regexp_split_to_array({_PY_STRIP}, '{TOKEN_SEP_PATTERN}')"
 _SIMPLE_TOKS = f"regexp_split_to_array({_SPACE_TRIM}, '[ ]+')"
 _EV_RN = "row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)"
-
-
-def _media_bucket_values() -> str:
-    """Engine-free twin for media_near_dup: decode the generated
-    near-dup media corpus driver-side with the same pure-numpy codecs
-    and compute each row's hyperplane bucket with the same exact-fold
-    dot (sign bits), emitting a VALUES table for the oracle's pair
-    join — the train_ivf_centroids_local pattern."""
-    import numpy as np
-
-    from quality_filter.operators import multimodal as M
-    from quality_filter.operators.similarity import make_planes
-
-    pdf = M.generate_near_dup_media(MEDIA_ND_GROUPS, seed=MEDIA_ND_SEED)
-    P = np.asarray(
-        make_planes(M.IMAGE_FEATURE_DIM, MEDIA_ND_PLANES, seed=MEDIA_ND_SEED),
-        dtype=np.float64,
-    )
-    vals = []
-    for _, r in pdf.iterrows():
-        px = M.decode_pixels(bytes(r["payload"]), None)
-        # same centering as the Spark query: float32 feature widened to
-        # float64, minus 0.5 (exact ops in both engines)
-        f = M.image_features(px).astype(np.float64) - 0.5
-        bits = "".join(
-            "1" if np.cumsum(f * P[i])[-1] >= 0 else "0" for i in range(len(P))
-        )
-        vals.append(f"(CAST({int(r['media_id'])} AS BIGINT), '{bits}')")
-    return ", ".join(vals)
 
 
 def _features_cte() -> str:
@@ -5377,17 +5247,6 @@ SELECT lang,
   quantile_disc(n_chars, 0.75) AS q75,
   CAST(count(*) AS BIGINT) AS n_docs
 FROM documents GROUP BY lang""",
-        "media_near_dup": f"""
-WITH mb(media_id, bucket) AS (VALUES {_media_bucket_values()})
-SELECT a.media_id AS id_a, b.media_id AS id_b, a.bucket AS bucket
-FROM mb a JOIN mb b ON a.bucket = b.bucket AND a.media_id < b.media_id""",
-        # WARC round-trip is byte-identity + the sniff gate drops the
-        # decoy, so the crawl variant's pair set equals media_near_dup's:
-        # same VALUES twin verbatim
-        "crawl_media_near_dup": f"""
-WITH mb(media_id, bucket) AS (VALUES {_media_bucket_values()})
-SELECT a.media_id AS id_a, b.media_id AS id_b, a.bucket AS bucket
-FROM mb a JOIN mb b ON a.bucket = b.bucket AND a.media_id < b.media_id""",
         "running_value_sum": """
 SELECT event_id, user_id,
   round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id

@@ -6,8 +6,7 @@ content-type sniffing and quarantine-on-error
 engine analog is a SOURCE operator: an Arrow-batched ``mapInPandas``
 stage that fetches each URL inside the task, emits the raw payload as
 BINARY next to sniffed metadata, and converts every failure into a row
-flag instead of a task failure (the same quarantine discipline as the
-media decoders).
+flag instead of a task failure.
 
 Scale shape: fetching is embarrassingly parallel and I/O-bound — one
 in-flight request per row within a partition, parallelism = partitions;
@@ -49,23 +48,6 @@ _MAGIC = (
     (b"PK\x03\x04", "application/zip"),
     (b"\x1f\x8b", "application/gzip"),
 )
-
-
-def sniff_content_type_col(payload):
-    """JVM-native twin of the ``_MAGIC`` prefix table: a codegen'd CASE
-    over binary prefixes — the sniff gate as a narrow map, no Python
-    crossing (used by the crawl→media composition to route WARC response
-    payloads by container).  Covers exactly the magic rows; the
-    html/utf-8 text heuristics stay in the Python fetch path (they need
-    decode-try semantics a CASE can't express) — non-magic payloads
-    fall through to 'application/octet-stream'."""
-    from pyspark.sql import functions as F
-
-    expr = None
-    for magic, ctype in _MAGIC:
-        cond = F.substring(payload, 1, len(magic)) == F.lit(bytearray(magic))
-        expr = F.when(cond, ctype) if expr is None else expr.when(cond, ctype)
-    return expr.otherwise("application/octet-stream")
 
 
 def sniff_content_type(payload: bytes) -> str:

@@ -22,16 +22,17 @@ checksum is a partial-aggregated groupBy of O(groups) rows.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from quality_filter.operators.sampling import hash_bucket
-
-SCRATCH_ROOT = "/tmp/qf_formats"
 
 # RFC-4180 quoting: quote with '"', escape an embedded quote by doubling
 # it, and allow quoted newlines on read (multiLine).  The whitespace
@@ -58,10 +59,18 @@ DOCUMENTS_SCHEMA = T.StructType([
 ])
 
 
+_scratch_root: str | None = None
+
+
 def scratch_path(tag: str, key: str) -> str:
-    """Deterministic scratch dir per (tag, input key) — md5 of the key
-    so fuzz corpora in different directories never collide."""
-    return os.path.join(SCRATCH_ROOT, f"{tag}_{hashlib.md5(key.encode()).hexdigest()[:10]}")
+    """Scratch dir per (tag, input key) — md5 of the key so fuzz corpora
+    in different directories never collide.  The root is private to
+    this process: made on first use, removed at interpreter exit."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="qf_formats_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return os.path.join(_scratch_root, f"{tag}_{hashlib.md5(key.encode()).hexdigest()[:10]}")
 
 
 def roundtrip_jsonl(df: DataFrame, spark: SparkSession, path: str,

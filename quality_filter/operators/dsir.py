@@ -137,6 +137,7 @@ def _ratios_from_joined(j: DataFrame, n_buckets: int) -> DataFrame:
     dimension, never a corpus)."""
     from pyspark.sql import Window
 
+    # unpartitioned on purpose: one row per hash bucket (n_buckets rows)
     w = Window.partitionBy()
     t_tot = F.sum("n_target").over(w)
     r_tot = F.sum("n_raw").over(w)

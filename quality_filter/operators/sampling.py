@@ -79,6 +79,7 @@ def temperature_mixture_rates(
     counts = df.groupBy(stratum_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
+    # unpartitioned on purpose: one row per stratum (dimension-sized)
     nmin = F.min(F.col("n_docs").cast("double")).over(Window.partitionBy())
     n = F.col("n_docs").cast("double")
     if temperature == 0.5:

@@ -1286,6 +1286,7 @@ def zipf_fit(df: DataFrame, text_col: str, k: int = ZIPF_HEAD_K) -> DataFrame:
     from pyspark.sql import Window
 
     head = top_terms(df, text_col, k)
+    # unpartitioned on purpose: ranks the k-row top-terms head only
     w = Window.orderBy(F.col("n").desc(), F.col("term").asc())
     ranked = head.select(F.row_number().over(w).alias("r"), "n")
     return _loglog_ls_fit(ranked, F.col("r"), F.col("n"), "n_terms")
@@ -1386,6 +1387,7 @@ def heaps_fit(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         full = assigned.sparkSession.createDataFrame(
             [(c,) for c in cs], "c long"
         ).join(hist, "c", "left")
+        # unpartitioned on purpose: one row per checkpoint (<= 64 rows)
         w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
         return full.select(
             "c",

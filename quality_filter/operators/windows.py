@@ -203,6 +203,7 @@ def global_order_positions(
     sizes = base.groupBy(tier_col, "_nib").agg(
         F.count(F.lit(1)).cast("long").alias("_cnt")
     )
+    # unpartitioned on purpose: one row per (tier, nibble), tiers x 16
     w_off = (
         W.orderBy(F.col(tier_col).asc(), F.col("_nib").asc())
         .rowsBetween(W.unboundedPreceding, -1)

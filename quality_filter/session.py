@@ -47,6 +47,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_size))
         .config("spark.driver.memory", os.environ.get("QF_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # the stage progress bar shares stderr with scripts' result lines
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )
     for k, v in (extra_conf or {}).items():

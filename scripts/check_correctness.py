@@ -39,7 +39,7 @@ def main() -> int:
     import __spark_entry__ as E
     from quality_filter.session import get_spark
 
-    spark = get_spark(cpus=8, app_name="qf-correctness")
+    spark = get_spark(app_name="qf-correctness")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"

@@ -31,7 +31,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 _TPCH = "reads TPC-H tables, which the fuzz corpus does not generate"
-_MEDIA = "builds its own media table, so no fuzzed table reaches it"
 _WARC = (
     "the strict writer rejects CR/LF in header-borne columns (lang/source) "
     "by design, so fuzzed header values turn the spec-correct abort into a "
@@ -47,8 +46,6 @@ FUZZ_EXCLUDED: dict[str, str] = {
         ],
         _TPCH,
     ),
-    "media_near_dup": _MEDIA,
-    "crawl_media_near_dup": _MEDIA,
     "pii_scrub_docs": (
         "RE2's \\d/\\b are ASCII, Java's (?U)\\d/\\b are Unicode: fuzz text "
         "with Unicode digits diverges by design (the normative Python oracle "
@@ -57,11 +54,6 @@ FUZZ_EXCLUDED: dict[str, str] = {
     "pii_hit_counts_docs": "the same RE2-vs-Java Unicode \\d/\\b seam as pii_scrub_docs",
     "warc_roundtrip_stats": _WARC,
     "wet_roundtrip_stats": _WARC,
-    "kmeans_step": (
-        "round(mean, 6) meets exact half-micro ties on fuzzed sums: Spark "
-        "rounds the decimal form half-up, DuckDB the binary double (seed 1: "
-        "-1278740/40/1e6 -> -0.031969 vs -0.031968)"
-    ),
     "csv_roundtrip_stats": (
         "a value equal to the CSV read-side NULL sentinel (formats."
         "CSV_NULL_SENTINEL) reads back as NULL and changes the row-image "

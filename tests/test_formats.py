@@ -85,6 +85,33 @@ def test_failfast_aborts_on_malformed_jsonl(spark, tmp_path):
         bad.collect()
 
 
+def test_scratch_root_is_per_process_and_removed_at_exit():
+    """scratch_path's root is made on first use and removed when the
+    interpreter exits, so registry calls leave no dirs behind (the
+    child imports formats only; no Spark starts)."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from quality_filter.io import formats\n"
+        "p = formats.scratch_path('t', 'k')\n"
+        "os.makedirs(p)\n"
+        "open(os.path.join(p, 'part-0'), 'w').close()\n"
+        "assert formats.scratch_path('u', 'k').startswith(os.path.dirname(p))\n"
+        "print(os.path.dirname(p))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True,
+        env={**os.environ, "PYTHONPATH": repo}, check=True,
+    )
+    root = out.stdout.strip()
+    assert os.path.basename(root).startswith("qf_formats_")
+    assert not os.path.exists(root)
+
+
 # ---------------------------------------------------------------------------
 # WARC container (io/warc.py)
 # ---------------------------------------------------------------------------

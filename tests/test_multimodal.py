@@ -1,37 +1,23 @@
-"""Multimodal tests — real PPM/BMP pixel decode, the optional-decoder
-capability ladder, resize, schema/batching/quarantine plumbing.
+"""Uncompressed-container codec tests — PPM/BMP pixel decode, the
+optional-decoder capability ladder, malformed-container raising, resize.
 
 Contract pinned here: an optional imaging library can only ADD decodable
-formats — its presence (working or broken) must never flip decode_ok to
-false for a payload that decodes without it."""
+formats — its presence (working or broken) must never change the result
+for a payload that decodes without it."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from quality_filter.operators.multimodal import (
-    IMAGE_FEATURE_DIM, MEDIA_SCHEMA, _to_bmp, audio_features, decode_bmp,
-    decode_features, decode_pixels, decode_png, decode_ppm, decode_wav,
-    encode_png, encode_ppm, encode_wav, frame_sample, generate_media,
-    image_features, resize_images, resize_nearest,
+from quality_filter.operators.rawcodecs import (
+    decode_bmp, decode_pixels, decode_ppm, encode_bmp, encode_ppm,
+    resize_nearest,
 )
-
-from tests.test_spark_pipeline import spark  # session fixture  # noqa: F401
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    return spark.createDataFrame(
-        generate_media(120, seed=11, real_image_every=6), schema=MEDIA_SCHEMA
-    )
 
 
 def _demo_pixels(w=8, h=6, seed=3):
     rng = np.random.default_rng(seed)
     return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
 
-
-# -- pure codec layer -------------------------------------------------------
 
 def test_ppm_roundtrip_and_comment_header():
     px = _demo_pixels()
@@ -42,316 +28,7 @@ def test_ppm_roundtrip_and_comment_header():
 
 def test_bmp_roundtrip():
     px = _demo_pixels(w=5, h=7)  # stride padding path (5*3 = 15 -> 16)
-    assert (decode_bmp(_to_bmp(px)) == px).all()
-
-
-def test_png_roundtrip_and_variants():
-    px = _demo_pixels()
-    assert (decode_png(encode_png(px)) == px).all()
-    # filter coverage: encode with each per-row filter type via a
-    # hand-built PNG (Sub=1, Up=2, Average=3, Paeth=4)
-    import struct as st
-    import zlib as zl
-
-    h, w, ch = px.shape
-    raw = bytearray()
-    prev = np.zeros(w * ch, dtype=np.int64)
-    for y, ftype in zip(range(h), [0, 1, 2, 3, 4, 0]):
-        cur = px[y].reshape(-1).astype(np.int64)
-        if ftype == 0:
-            enc = cur.copy()
-        elif ftype == 1:
-            enc = cur.copy()
-            enc[ch:] = (cur[ch:] - cur[:-ch]) % 256
-        elif ftype == 2:
-            enc = (cur - prev) % 256
-        elif ftype == 3:
-            enc = np.zeros_like(cur)
-            for x in range(len(cur)):
-                left = cur[x - ch] if x >= ch else 0
-                enc[x] = (cur[x] - ((left + prev[x]) >> 1)) % 256
-        else:
-            enc = np.zeros_like(cur)
-            for x in range(len(cur)):
-                a = cur[x - ch] if x >= ch else 0
-                b = prev[x]
-                c = prev[x - ch] if x >= ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                enc[x] = (cur[x] - pred) % 256
-        raw += bytes([ftype]) + bytes(enc.astype(np.uint8))
-        prev = cur
-
-    def chunk(ctype, data):
-        body = ctype + data
-        return st.pack(">I", len(data)) + body + st.pack(">I", zl.crc32(body) & 0xFFFFFFFF)
-
-    b = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", st.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zl.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-    assert (decode_png(b) == px).all()
-    with pytest.raises(ValueError):
-        decode_png(b"\x89PNG\r\n\x1a\n" + b"\x00" * 20)  # no IHDR/IDAT
-
-
-def test_png_palette_color_type():
-    """Color type 3 (palette/PLTE) — the common web-PNG shape."""
-    import struct as st
-    import zlib as zl
-
-    palette = np.array(
-        [[255, 0, 0], [0, 255, 0], [0, 0, 255], [10, 20, 30]], dtype=np.uint8
-    )
-    idx = np.array([[0, 1, 2, 3], [3, 2, 1, 0], [1, 1, 2, 2]], dtype=np.uint8)
-    h, w = idx.shape
-    raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(h))
-
-    def chunk(ctype, data):
-        body = ctype + data
-        return st.pack(">I", len(data)) + body + st.pack(">I", zl.crc32(body) & 0xFFFFFFFF)
-
-    b = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", st.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0))
-        + chunk(b"PLTE", palette.tobytes())
-        + chunk(b"IDAT", zl.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    assert (decode_png(b) == palette[idx]).all()
-    # out-of-palette index quarantines
-    bad_idx = idx.copy()
-    bad_idx[0, 0] = 9
-    raw_bad = b"".join(b"\x00" + bad_idx[y].tobytes() for y in range(h))
-    b_bad = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", st.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0))
-        + chunk(b"PLTE", palette.tobytes())
-        + chunk(b"IDAT", zl.compress(raw_bad))
-        + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError):
-        decode_png(b_bad)
-
-
-def test_png_adam7_interlaced():
-    """Adam7: seven independently-filtered passes scatter back to the
-    original image, across awkward dimensions."""
-    import struct as st
-    import zlib as zl
-
-    from quality_filter.operators.multimodal import PNG_ADAM7
-
-    def chunk(t, d):
-        body = t + d
-        return st.pack(">I", len(d)) + body + st.pack(">I", zl.crc32(body) & 0xFFFFFFFF)
-
-    for w, h, seed in ((7, 11, 1), (8, 8, 2), (1, 1, 3), (17, 3, 4)):
-        px = _demo_pixels(w=w, h=h, seed=seed)
-        raw = bytearray()
-        for x0, y0, xs, ys in PNG_ADAM7:
-            sub = px[y0::ys, x0::xs]
-            if sub.size == 0:
-                continue
-            for y in range(sub.shape[0]):
-                raw += b"\x00" + sub[y].tobytes()
-        b = (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", st.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1))
-            + chunk(b"IDAT", zl.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
-        )
-        assert (decode_png(b) == px).all(), (w, h)
-
-
-def test_gif_interlaced():
-    """Interlaced GIF: rows stored in the four Adam-style passes must
-    reassemble to the original image (built by reordering a normal
-    encoding's rows and setting the interlace flag)."""
-    from quality_filter.operators.gif import decode_gif, encode_gif
-
-    img = _demo_pixels(w=5, h=11)
-    plain = bytearray(encode_gif(img, levels=6))
-    want = decode_gif(bytes(plain))
-    # rebuild: rows permuted into interlace order + interlace flag set
-    h, w = img.shape[:2]
-    order = [y for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)) for y in range(start, h, step)]
-    permuted = want[order]  # store rows in pass order
-    inter = bytearray(encode_gif(permuted, levels=6))
-    # encode_gif's idempotent quantization means re-encoding `permuted`
-    # keeps the palette identical; set the interlace bit in the image
-    # descriptor (offset: 6-byte sig + 7-byte LSD + palette, +9)
-    palette_len = 3 * (2 << (inter[10] & 7))
-    desc_off = 13 + palette_len
-    assert inter[desc_off] == 0x2C
-    inter[desc_off + 9] |= 0x40
-    got = decode_gif(bytes(inter))
-    assert (got == want).all()
-
-
-def test_jpeg_restart_intervals():
-    from quality_filter.operators.jpeg import decode_jpeg, encode_jpeg
-
-    yy, xx = np.mgrid[0:24, 0:33]
-    img = np.stack(
-        [
-            (128 + 100 * np.sin(xx / 7)).clip(0, 255),
-            (128 + 100 * np.cos(yy / 9)).clip(0, 255),
-            xx * 255 / 32,
-        ],
-        axis=2,
-    ).astype(np.uint8)
-    base = decode_jpeg(encode_jpeg(img, q=4))
-    for ri in (1, 2, 5):
-        for sub in (False, True):
-            b = encode_jpeg(img, subsample=sub, q=4, restart_interval=ri)
-            import re
-
-            assert b"\xff\xdd" in b and re.search(rb"\xff[\xd0-\xd7]", b)
-            out = decode_jpeg(b)
-            ref = decode_jpeg(encode_jpeg(img, subsample=sub, q=4))
-            assert (out == ref).all()  # restarts change framing, not pixels
-    assert np.abs(base.astype(int) - img.astype(int)).max() <= 4
-
-
-def test_wav_roundtrip_and_features():
-    t = np.arange(16000) / 16000.0
-    sig = 0.5 * np.sin(2 * np.pi * 440 * t)
-    samples, rate = decode_wav(encode_wav(sig, 16000))
-    assert rate == 16000 and len(samples) == 16000
-    assert np.abs(samples - sig).max() < 1e-3  # 16-bit quantization
-    f = audio_features(samples, rate)
-    assert f.shape == (16,) and np.isfinite(f).all()
-    # a 440 Hz tone: centroid ~ 440/(rate/2) = 0.055, strong low band
-    assert 0.02 < f[9] < 0.12
-    assert f[11] > 0.9  # low-frequency band dominates
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFF" + b"\x00" * 16)
-
-
-def test_jpeg_roundtrip_and_real_fixtures():
-    import glob
-
-    from quality_filter.operators.jpeg import decode_jpeg, encode_jpeg
-
-    yy, xx = np.mgrid[0:24, 0:17]
-    img = np.stack(
-        [
-            (128 + 100 * np.sin(xx / 7)).clip(0, 255),
-            (128 + 100 * np.cos(yy / 9)).clip(0, 255),
-            xx * 255 / 16,
-        ],
-        axis=2,
-    ).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(img, subsample=False, q=4))
-    assert out.shape == img.shape
-    assert np.abs(out.astype(float) - img.astype(float)).max() <= 4  # quantization only
-    out420 = decode_jpeg(encode_jpeg(img, subsample=True, q=4))
-    assert np.abs(out420.astype(float) - img.astype(float)).mean() < 8  # chroma loss
-
-    with pytest.raises(ValueError):
-        decode_jpeg(b"\xff\xd8" + b"\x00" * 16)  # garbage after SOI
-    with pytest.raises(ValueError):
-        decode_jpeg(encode_jpeg(img)[:-40])  # truncated entropy data
-
-    # real encoders: JPEGs shipped inside host Python distributions
-    # (generic Huffman tables, 4:2:0, APP segments) — skip if absent
-    fixtures = [
-        f
-        for pat in (
-            "/mnt/*/model_tools_env/*/python/install/lib/python3*/test/imghdrdata/python.jpg",
-            "/usr/lib/python3*/test/imghdrdata/python.jpg",
-        )
-        for f in glob.glob(pat)
-    ]
-    if not fixtures:
-        pytest.skip("no real jpeg fixtures on this host")
-    arr = decode_jpeg(open(fixtures[0], "rb").read())
-    assert arr.shape == (16, 16, 3)  # the CPython test logo
-    assert arr.std() > 20  # decoded real content, not noise-shaped garbage
-
-
-def test_gif_roundtrip_and_real_fixtures():
-    import glob
-
-    from quality_filter.operators.gif import decode_gif, encode_gif
-
-    img = _demo_pixels(w=9, h=13)
-    out = decode_gif(encode_gif(img, levels=6))
-    quant = ((img.astype(np.int64) * 6 // 256) * 51).astype(np.uint8)
-    assert (out == quant).all()  # exact to the quantized palette
-    with pytest.raises(ValueError):
-        decode_gif(b"GIF89a" + b"\x00" * 8)
-    with pytest.raises(ValueError):
-        decode_gif(encode_gif(img)[:-20])
-
-    fixtures = glob.glob(
-        "/mnt/*/model_tools_env/*/python/install/lib/python3*/idlelib/Icons/idle_16.gif"
-    ) + glob.glob("/usr/lib/python3*/idlelib/Icons/idle_16.gif")
-    if not fixtures:
-        pytest.skip("no real gif fixtures on this host")
-    arr = decode_gif(open(fixtures[0], "rb").read())
-    assert arr.shape == (16, 16, 3) and arr.std() > 20
-
-
-def _deep_corrupt_payloads():
-    """Malformed recognized containers whose codecs fail DEEP with
-    non-ValueError classes (zlib.error / struct.error / IndexError) —
-    the quarantine-contract regressions from the round-2 advice."""
-    import numpy as np
-
-    from quality_filter.operators.jpeg import encode_jpeg
-    from quality_filter.operators.multimodal import encode_png
-
-    px = (np.arange(6 * 8 * 3, dtype=np.uint8).reshape(6, 8, 3) * 7) % 256
-    png = encode_png(px)
-    idx = png.find(b"IDAT")
-    bad_idat = png[: idx + 4] + b"\x00" * 8 + png[idx + 12 :]  # zlib.error
-    jp = encode_jpeg(px)
-    return {
-        "png": bad_idat,
-        "jpeg_mid_scan": jp[:75],  # IndexError inside the Huffman scan
-        "jpeg_mid_marker": jp[:76],  # struct.error on a split marker header
-    }
-
-
-def test_deep_corruption_normalized_to_valueerror():
-    """decode_pixels must raise ValueError (the quarantine class) no
-    matter which layer of the codec the corruption explodes in."""
-    for name, bad in _deep_corrupt_payloads().items():
-        with pytest.raises(ValueError):
-            decode_pixels(bad)
-
-
-def test_deep_corruption_quarantined_in_all_stages(spark):
-    """A corrupt-IDAT PNG / truncated JPEG must not fail the Spark task
-    in ANY decode stage; the decoder column records the sniffed
-    container name, not raw payload bytes."""
-    import pandas as pd
-
-    from quality_filter.operators.multimodal import explode_frames, resize_images
-
-    bads = _deep_corrupt_payloads()
-    pdf = pd.DataFrame(
-        {
-            "media_id": range(len(bads)),
-            "url": ["u"] * len(bads),
-            "kind": ["image"] * len(bads),
-            "payload": list(bads.values()),
-            "meta": [None] * len(bads),
-        }
-    )
-    df = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-    feats = decode_features(df).toPandas()
-    assert (~feats["decode_ok"]).all()
-    assert sorted(feats["decoder"]) == ["jpeg", "jpeg", "png"]
-    resized = resize_images(df, 4, 4).toPandas()
-    assert (~resized["resize_ok"]).all()
-    frames = explode_frames(df).toPandas()
-    assert (~frames["frame_ok"]).all() and len(frames) == len(bads)
+    assert (decode_bmp(encode_bmp(px)) == px).all()
 
 
 def test_malformed_recognized_containers_raise():
@@ -359,7 +36,7 @@ def test_malformed_recognized_containers_raise():
     for bad in (
         encode_ppm(px)[:-10],          # truncated ppm raster
         b"P6\n0 6\n255\n",             # zero width
-        _to_bmp(px)[:-20],             # truncated bmp raster
+        encode_bmp(px)[:-20],          # truncated bmp raster
         b"BM" + b"\x00" * 80,          # nonsense bmp header
     ):
         with pytest.raises(ValueError):
@@ -404,437 +81,6 @@ def test_resize_nearest_deterministic():
     assert (resize_nearest(px, 4, 4) == small).all()
     # identity resize is exact
     assert (resize_nearest(px, 16, 9) == px).all()
-
-
-# -- Spark stages -----------------------------------------------------------
-
-def test_decode_schema_and_rowcount(spark, media):
-    out = decode_features(media)
-    assert [f.name for f in out.schema.fields] == [
-        "media_id", "kind", "payload_bytes", "payload_crc", "features",
-        "decode_ok", "decoder",
-    ]
-    rows = out.collect()
-    assert len(rows) == 120
-
-
-def test_real_pixel_decode_end_to_end(spark, media):
-    """Rows carrying real PPM/BMP payloads decode through the pure-numpy
-    codecs inside the Spark stage, and their features equal the local
-    image_features computation exactly."""
-    out = decode_features(media).toPandas().set_index("media_id")
-    src = media.toPandas().set_index("media_id")
-    real = out[out["decoder"].isin(["ppm", "bmp", "png", "jpeg", "gif", "tiff"])]
-    assert len(real) > 5 and set(real["decoder"]) == {"ppm", "bmp", "png", "jpeg", "gif", "tiff"}
-    assert real["decode_ok"].all()
-    for mid, row in real.iterrows():
-        px = decode_pixels(bytes(src.loc[mid, "payload"]))
-        assert np.allclose(row["features"], image_features(px), atol=0)
-    wav = out[out["decoder"] == "wav"]
-    assert len(wav) > 0 and wav["decode_ok"].all()
-    for mid, row in wav.iterrows():
-        samples, rate = decode_wav(bytes(src.loc[mid, "payload"]))
-        assert np.allclose(row["features"], audio_features(samples, rate), atol=0)
-
-
-def test_malformed_recognized_payload_quarantined(spark):
-    import pandas as pd
-
-    px = _demo_pixels()
-    pdf = pd.DataFrame(
-        {
-            "media_id": [0, 1, 2],
-            "url": ["u"] * 3,
-            "kind": ["image"] * 3,
-            "payload": [encode_ppm(px), encode_ppm(px)[:-10], b"opaquebytes" * 8],
-            "meta": [None] * 3,
-        }
-    )
-    out = (
-        decode_features(spark.createDataFrame(pdf, schema=MEDIA_SCHEMA))
-        .toPandas().set_index("media_id")
-    )
-    assert bool(out.loc[0, "decode_ok"]) and out.loc[0, "decoder"] == "ppm"
-    assert not bool(out.loc[1, "decode_ok"])          # malformed -> quarantine
-    assert bool(out.loc[2, "decode_ok"]) and out.loc[2, "decoder"] == "stub"
-
-
-def test_null_payloads_quarantined_not_failed(spark, media):
-    out = decode_features(media).toPandas()
-    nulls = out[out["payload_bytes"].isna()]
-    assert len(nulls) > 0
-    assert (~nulls["decode_ok"]).all()
-    ok = out[out["decode_ok"]]
-    assert (ok["features"].map(len) == IMAGE_FEATURE_DIM).all()
-
-
-def test_decode_deterministic(spark, media):
-    a = decode_features(media).toPandas().sort_values("media_id")
-    b = decode_features(media.repartition(7)).toPandas().sort_values("media_id")
-    assert (a["payload_crc"].fillna(-1).values == b["payload_crc"].fillna(-1).values).all()
-    for fa, fb in zip(a["features"], b["features"]):
-        assert (fa is None and fb is None) or list(fa) == list(fb)
-
-
-def test_resize_stage(spark, media):
-    out = resize_images(media, 4, 4).toPandas().set_index("media_id")
-    src = media.toPandas().set_index("media_id")
-    ok = out[out["resize_ok"]]
-    assert len(ok) > 5
-    for mid, row in ok.iterrows():
-        resized = decode_ppm(bytes(row["payload"]))
-        assert resized.shape == (4, 4, 3)
-        want = resize_nearest(decode_pixels(bytes(src.loc[mid, "payload"])), 4, 4)
-        assert (resized == want).all()
-    # opaque / null payloads: flagged, not failed
-    assert (~out.loc[out.index.difference(ok.index), "resize_ok"]).all()
-
-
-def test_frame_sample_decimation(spark, media):
-    out = frame_sample(media, every_k=4).toPandas()
-    full = media.toPandas()
-    # structural: fewer rows out, at least one per url
-    assert 0 < len(out) < len(full)
-    assert set(out["url"]) == set(full["url"])
-
-
-def test_explode_frames_video_source(spark, media):
-    """Animated GIFs explode into one PPM row per frame; static images
-    emit a single frame; opaque payloads quarantine.  Composes with
-    frame_sample and decode_features (the two-stage video loop)."""
-    from quality_filter.operators.gif import decode_gif_frames
-    from quality_filter.operators.multimodal import explode_frames
-
-    frames = explode_frames(media).toPandas()
-    src = media.toPandas().set_index("media_id")
-    multi = frames[frames["n_frames"] > 1]
-    assert len(multi) > 0  # the generator planted animated gifs
-    for mid, grp in multi.groupby("media_id"):
-        want = decode_gif_frames(bytes(src.loc[mid, "payload"]))
-        assert sorted(grp["frame_idx"]) == list(range(len(want)))
-        for _, row in grp.iterrows():
-            got = decode_ppm(bytes(row["payload"]))
-            assert (got == want[int(row["frame_idx"])]).all()
-    # conservation: every media row appears (as frames or a false row)
-    assert set(frames["media_id"]) == set(src.index)
-
-    # frames flow into the decode/featurize stage unchanged
-    feat_in = spark.createDataFrame(
-        frames[frames["frame_ok"]].assign(
-            media_id=lambda d: d["media_id"] * 1000 + d["frame_idx"].astype(int),
-            kind="image",
-        )[["media_id", "kind", "payload"]]
-    )
-    feats = decode_features(feat_in).toPandas()
-    assert (feats["decoder"] == "ppm").all() and feats["decode_ok"].all()
-
-
-# -- progressive JPEG --------------------------------------------------------
-
-def test_progressive_jpeg_roundtrip_exact_vs_baseline():
-    """decode(progressive(x)) must equal decode(baseline(x)) BIT-FOR-BIT:
-    both encoders quantize identically, so after all progressive scans
-    (spectral bands + DC/AC successive approximation) the accumulated
-    coefficients are the baseline coefficients, and the shared IDCT
-    yields identical pixels.  Covers EOB runs, ZRL-in-refinement,
-    correction bits, new-coefficient insertion, and band geometry."""
-    from quality_filter.operators.jpeg import (
-        decode_jpeg, encode_jpeg, encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(42)
-    cases = [
-        ((16, 16), False, ((1, 63),), 1, 1),       # single band
-        ((21, 34), False, ((1, 5), (6, 63)), 1, 1),  # two bands
-        ((24, 40), True, ((1, 5), (6, 63)), 1, 1),   # 2x2 subsampling
-        ((17, 9), False, ((1, 2), (3, 20), (21, 63)), 2, 2),  # deep SA
-        ((8, 8), False, ((1, 63),), 1, 1),           # single MCU
-    ]
-    for (h, w), sub, bands, dc_al, ac_al in cases:
-        arr = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        base = decode_jpeg(encode_jpeg(arr, subsample=sub))
-        prog = decode_jpeg(
-            encode_jpeg_progressive(arr, subsample=sub, bands=bands, dc_al=dc_al, ac_al=ac_al)
-        )
-        assert (base == prog).all(), (h, w, sub, bands, dc_al, ac_al)
-
-    # smooth gradient (long EOB runs across blocks) + flat image (all-EOB)
-    yy, xx = np.mgrid[0:32, 0:48]
-    grad = np.stack([(yy * 3) % 256, (xx * 2) % 256, ((yy + xx)) % 256], axis=2).astype(np.uint8)
-    flat = np.full((24, 24, 3), 200, dtype=np.uint8)
-    for arr in (grad, flat):
-        base = decode_jpeg(encode_jpeg(arr))
-        prog = decode_jpeg(encode_jpeg_progressive(arr))
-        assert (base == prog).all()
-
-
-def test_progressive_jpeg_real_fixtures():
-    """Real libjpeg-progressive files from the host decode with correct
-    dimensions and real content; truncations quarantine as ValueError
-    through decode_pixels."""
-    import os
-
-    from quality_filter.operators.jpeg import decode_jpeg
-
-    fixtures = [
-        ("/usr/share/doc/nodejs/thin-white-stripe.jpg", (58, 493)),
-        ("/usr/share/doc/nodejs/full-white-stripe.jpg", (312, 493)),
-        (
-            "/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/multi-channel/grayscale.jpg",
-            (215, 300),
-        ),
-    ]
-    found = [(p, d) for p, d in fixtures if os.path.exists(p)]
-    if not found:
-        pytest.skip("no progressive fixtures on this host")
-    for p, (h, w) in found:
-        b = open(p, "rb").read()
-        arr = decode_jpeg(b)
-        assert arr.shape == (h, w, 3)
-        assert arr.std() > 10  # decoded real content, not noise/zeros
-        with pytest.raises(ValueError):
-            decode_pixels(b[: len(b) // 2])
-        assert decode_pixels(b).shape == (h, w, 3)  # multimodal dispatch
-
-
-def test_baseline_jpeg_more_real_fixtures():
-    """Real camera/photo JPEGs shipped with Spark's mllib data and other
-    host packages (different encoders, subsamplings, APPn metadata) —
-    broader real-encoder validation than the tiny CPython logo."""
-    import glob
-    import os
-
-    from quality_filter.operators.jpeg import decode_jpeg
-
-    fixtures = sorted(
-        glob.glob("/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/kittens/*.jpg")
-    ) + [
-        "/opt/spark-4.1.2-bin-hadoop3/data/mllib/images/origin/multi-channel/chr30.4.184.jpg",
-        "/usr/lib/google-cloud-sdk/platform/gsutil/third_party/requests/ext/flower-of-life.jpg",
-    ]
-    fixtures = [p for p in fixtures if os.path.exists(p)]
-    if not fixtures:
-        pytest.skip("no photo fixtures on this host")
-    ok = 0
-    for p in fixtures:
-        arr = decode_jpeg(open(p, "rb").read())
-        assert arr.ndim == 3 and arr.shape[2] == 3 and min(arr.shape[:2]) >= 100
-        assert arr.std() > 20  # real photographic content
-        ok += 1
-    assert ok >= 3
-
-
-# -- TIFF --------------------------------------------------------------------
-
-def _tiff_lzw_encode(data: bytes) -> bytes:
-    """Minimal TIFF-LZW encoder (MSB-first, EarlyChange) for test input."""
-    out = bytearray()
-    acc, nbits = 0, 0
-
-    def emit(code, width):
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    table = {bytes([i]): i for i in range(256)}
-    next_code = 258
-    width = 9
-    emit(256, width)  # clear
-    cur = b""
-    for byte in data:
-        nxt = cur + bytes([byte])
-        if nxt in table:
-            cur = nxt
-            continue
-        emit(table[cur], width)
-        table[nxt] = next_code
-        next_code += 1
-        # EarlyChange: encoder bumps width when next_code+1 would overflow
-        if next_code + 1 > (1 << width) and width < 12:
-            width += 1
-        if next_code >= 4094:
-            emit(256, width)
-            table = {bytes([i]): i for i in range(256)}
-            next_code = 258
-            width = 9
-        cur = bytes([byte])
-    if cur:
-        emit(table[cur], width)
-    emit(257, width)  # EOI
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
-def _build_tiff(px, comp_id, body, extra_entries=()):
-    import struct as st
-
-    h, w = px.shape[:2]
-    data_off = 8
-    entries = [
-        (256, 3, 1, w), (257, 3, 1, h), (259, 3, 1, comp_id), (262, 3, 1, 2),
-        (273, 4, 1, data_off), (277, 3, 1, 3), (278, 3, 1, h),
-        (279, 4, 1, len(body)),
-    ] + list(extra_entries)
-    entries.sort()
-    ifd_off = data_off + len(body)
-    out = bytearray(b"II*\x00") + st.pack("<I", ifd_off) + body
-    out += st.pack("<H", len(entries))
-    for tag, typ, cnt, val in entries:
-        out += st.pack("<HHII", tag, typ, cnt, val)
-    out += st.pack("<I", 0)
-    return bytes(out)
-
-
-def test_tiff_roundtrips_and_real_fixture():
-    """Round-trips for none/PackBits/Deflate, TIFF-LZW (MSB-first,
-    EarlyChange) against a hand-rolled encoder, horizontal-differencing
-    predictor, gray + white-is-zero photometrics — plus the real
-    CPython test fixture (uncompressed RGBA, alpha dropped)."""
-    import glob
-    import os
-
-    from quality_filter.operators.tiff import decode_tiff, encode_tiff
-
-    px = _demo_pixels(w=7, h=11, seed=9)
-    for comp in ("none", "packbits", "deflate"):
-        assert (decode_tiff(encode_tiff(px, comp)) == px).all(), comp
-
-    # LZW strip
-    body = _tiff_lzw_encode(px.tobytes())
-    assert (decode_tiff(_build_tiff(px, 5, body)) == px).all()
-
-    # predictor 2 (horizontal differencing): body carries per-channel diffs
-    diff = px.astype(np.int64).copy()
-    diff[:, 1:] = (px[:, 1:].astype(np.int64) - px[:, :-1].astype(np.int64)) % 256
-    b = _build_tiff(px, 1, diff.astype(np.uint8).tobytes(), [(317, 3, 1, 2)])
-    assert (decode_tiff(b) == px).all()
-
-    # real fixture: CPython's uncompressed RGBA python.tiff
-    fixtures = glob.glob(
-        "/root/.pyenv/versions/3.*/lib/python3.*/test/imghdrdata/python.tiff"
-    )
-    if fixtures:
-        arr = decode_tiff(open(fixtures[0], "rb").read())
-        assert arr.shape == (16, 16, 3) and arr.std() > 20
-    else:
-        pytest.skip("no tiff fixture")
-
-    # malformed: truncated strip / bad magic quarantine as ValueError
-    with pytest.raises(ValueError):
-        decode_tiff(encode_tiff(px)[:40])
-    with pytest.raises(ValueError):
-        decode_tiff(b"II+\x00" + b"\x00" * 32)
-    # unsupported compression id quarantines, never crashes
-    with pytest.raises(ValueError):
-        decode_tiff(_build_tiff(px, 7, px.tobytes()))  # JPEG-in-TIFF
-
-
-def test_tiff_flows_through_decode_features(spark):
-    import pandas as pd
-
-    from quality_filter.operators.tiff import encode_tiff
-
-    px = _demo_pixels(w=6, h=4, seed=12)
-    pdf = pd.DataFrame(
-        {
-            "media_id": [0, 1],
-            "url": ["u"] * 2,
-            "kind": ["image"] * 2,
-            "payload": [encode_tiff(px), encode_tiff(px)[:30]],
-            "meta": [None] * 2,
-        }
-    )
-    out = (
-        decode_features(spark.createDataFrame(pdf, schema=MEDIA_SCHEMA))
-        .toPandas().set_index("media_id")
-    )
-    assert bool(out.loc[0, "decode_ok"]) and out.loc[0, "decoder"] == "tiff"
-    assert np.allclose(out.loc[0, "features"], image_features(px), atol=0)
-    assert not bool(out.loc[1, "decode_ok"]) and out.loc[1, "decoder"] == "tiff"
-
-
-def test_exif_orientation_table_pinned_independently():
-    """apply_orientation's 8-entry table pinned against hand-computed
-    literals and independent numpy transforms (round-3 ADVICE: the
-    round-trip test below validates decode_jpeg against
-    apply_orientation itself, so a swapped table entry — e.g. 5/7 —
-    could never regress it)."""
-    from quality_filter.operators.jpeg import apply_orientation
-
-    # hand-computed literals on a 2x2 where orientations 5..8 all differ
-    A, B, C, D = [1, 1, 1], [2, 2, 2], [3, 3, 3], [4, 4, 4]
-    sq = np.array([[A, B], [C, D]], dtype=np.uint8)
-    literal = {
-        1: [[A, B], [C, D]],
-        2: [[B, A], [D, C]],          # mirror left-right
-        3: [[D, C], [B, A]],          # rotate 180
-        4: [[C, D], [A, B]],          # mirror top-bottom
-        5: [[A, C], [B, D]],          # transpose (main diagonal)
-        6: [[C, A], [D, B]],          # stored = upright rotated 90 CCW -> fix: 90 CW
-        7: [[D, B], [C, A]],          # transverse (anti-diagonal)
-        8: [[B, D], [A, C]],          # fix: 90 CCW
-    }
-    for o, want in literal.items():
-        got = apply_orientation(sq, o)
-        assert (got == np.array(want, dtype=np.uint8)).all(), o
-
-    # full-table check on a non-square image: shapes + values against
-    # independent numpy transforms (PIL exif_transpose equivalents)
-    a = np.arange(2 * 5 * 3, dtype=np.uint8).reshape(2, 5, 3)
-    spec = {
-        1: a,
-        2: a[:, ::-1],
-        3: a[::-1, ::-1],
-        4: a[::-1, :],
-        5: a.transpose(1, 0, 2),
-        6: np.rot90(a, -1),
-        7: a[::-1, ::-1].transpose(1, 0, 2),
-        8: np.rot90(a, 1),
-    }
-    for o, want in spec.items():
-        got = apply_orientation(a, o)
-        assert got.shape == want.shape and (got == want).all(), o
-
-
-def test_jpeg_exif_orientation():
-    """EXIF-oriented JPEGs decode upright: all 8 orientation values
-    (APP1 is a TIFF stream — parsed by the shared IFD reader), with
-    no-EXIF and upright=False behavior unchanged."""
-    import struct as st
-
-    from quality_filter.operators.jpeg import (
-        apply_orientation, decode_jpeg, encode_jpeg, exif_orientation,
-    )
-
-    def with_exif(jpg, orientation):
-        tiff = b"II*\x00" + st.pack("<I", 8)
-        tiff += (
-            st.pack("<H", 1)
-            + st.pack("<HHIHH", 274, 3, 1, orientation, 0)
-            + st.pack("<I", 0)
-        )
-        payload = b"Exif\x00\x00" + tiff
-        return jpg[:2] + b"\xff\xe1" + st.pack(">H", len(payload) + 2) + payload + jpg[2:]
-
-    px = _demo_pixels(w=14, h=9, seed=4)
-    jpg = encode_jpeg(px)
-    raw = decode_jpeg(jpg)
-    for o in range(1, 9):
-        j = with_exif(jpg, o)
-        assert exif_orientation(j) == o
-        got = decode_jpeg(j)
-        want = apply_orientation(raw, o)
-        assert got.shape == want.shape and (got == want).all(), o
-    assert (decode_jpeg(jpg) == raw).all()  # no EXIF → unchanged
-    assert (decode_jpeg(with_exif(jpg, 6), upright=False) == raw).all()
-    # corrupt EXIF degrades to orientation 1, never raises
-    bad = with_exif(jpg, 6)
-    bad = bad[:10] + b"\xff" * 4 + bad[14:]
-    assert decode_jpeg(bad).shape == raw.shape
 
 
 def test_bmp_palette_and_rle8():
@@ -894,27 +140,3 @@ def test_bmp_palette_and_rle8():
     raw_bad = b"".join((bad[::-1])[y].tobytes() + b"\x00" for y in range(9))
     with pytest.raises(ValueError):
         decode_bmp(build(bad, 0, raw_bad, True))
-
-
-def test_media_near_dup_composition(spark):
-    """Composed decode→featurize→hyperplane-LSH near-dup (verdict r3 #4):
-    lossless re-encodes (PPM/PNG/BMP of one base image) decode to
-    identical pixels → identical features → the SAME bucket, so every
-    group's lossless triple must appear as pairs; a decoy only pairs by
-    hash collision, never by construction."""
-    import __spark_entry__ as E
-    from quality_filter.operators.multimodal import generate_near_dup_media
-
-    pdf = generate_near_dup_media(E.MEDIA_ND_GROUPS, seed=E.MEDIA_ND_SEED)
-    # 5 variants per group: ppm, png, bmp, jpeg, decoy — in that order
-    assert len(pdf) == 5 * E.MEDIA_ND_GROUPS
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in E.q_media_near_dup(spark, "/root/testdata/sf0.001").collect()
-    }
-    for g in range(E.MEDIA_ND_GROUPS):
-        base = 5 * g
-        lossless = (base, base + 1, base + 2)
-        for i, a in enumerate(lossless):
-            for b in lossless[i + 1 :]:
-                assert (a, b) in pairs, f"lossless pair {(a, b)} missing"

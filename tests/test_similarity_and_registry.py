@@ -648,14 +648,13 @@ def test_registry_contract():
     assert all(fn.__name__ == "q_" + name for name, fn in qs.items())
 
     # one implementation per result: keys may share oracle SQL only when
-    # they read different inputs (a format round trip, a media source)
+    # they read different inputs (the format round trips)
     by_sql: dict = {}
     for name, text in sql.items():
         by_sql.setdefault(text, set()).add(name)
     shared = {frozenset(g) for g in by_sql.values() if len(g) > 1}
     assert shared <= {
         frozenset(f"{fmt}_roundtrip_stats" for fmt in ("jsonl", "csv", "orc", "warc", "wet")),
-        frozenset({"media_near_dup", "crawl_media_near_dup"}),
     }, sorted(map(sorted, shared))
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

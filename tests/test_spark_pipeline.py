@@ -25,6 +25,7 @@ def spark():
     from quality_filter.session import get_spark
 
     s = get_spark(cpus=4, app_name="qf-tests", shuffle_partitions=8)
+    assert s.conf.get("spark.ui.showConsoleProgress") == "false"
     yield s
     s.stop()
 
