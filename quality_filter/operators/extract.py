@@ -32,7 +32,10 @@ def make_extract_udf():
 
 def extracted_text_col(text: Column, html: Column) -> Column:
     """``coalesce(text, extract(html))`` — pre-populated text rows skip
-    extraction (the in-memory-handle passthrough analog,
-    /root/reference/opennsfw2/_inference.py:31-32).  The UDF is only
-    evaluated where ``text`` is NULL thanks to conditional evaluation."""
-    return F.when(text.isNotNull(), text).otherwise(make_extract_udf()(html))
+    extraction (the in-memory-handle passthrough analog, opennsfw2
+    ``_inference.py:31-32``).  ``ExtractPythonUDFs``
+    hoists the UDF out of the ``CASE WHEN``, so it sees every row; a row
+    that has text sends NULL instead of its html bytes and comes back
+    NULL, the way ``_scored_plan`` masks the model input."""
+    udf_input = F.when(text.isNull(), html)
+    return F.when(text.isNotNull(), text).otherwise(make_extract_udf()(udf_input))

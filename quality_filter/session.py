@@ -50,6 +50,8 @@ def get_spark(
         # the stage progress bar shares stderr with scripts' result lines
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # workers read each zip archive's directory once, not once per task
+        .config("spark.python.daemon.module", "quality_filter.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -20,6 +20,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import N_PAGES, SF_DIR, ensure_pages, force  # noqa: E402
@@ -422,6 +423,36 @@ def soak_tfidf_cosine(spark) -> None:
               f"us_per_doc={w / n * 1e6:8.1f}")
 
 
+def soak_worker_tax(spark) -> None:
+    """Fixed cost of a Python-UDF task: an identity pandas UDF against the
+    native ``upper`` over the same 12k cached rows in 3, 12 and 48
+    partitions.  The rows stay fixed, so slot seconds per task (wall x
+    slots / tasks) is what each task costs beyond its rows; the gap to
+    ``upper`` is the Python crossing's share.  Reports only; the one
+    invariant is that both outputs equal the input (the rows are upper
+    case already)."""
+    @F.pandas_udf("string")
+    def identity(s: pd.Series) -> pd.Series:
+        return s
+
+    base = spark.range(12_000).select(F.format_string("DOC %05d", "id").alias("s"))
+    expected = sorted(r.s for r in base.collect())
+    slots = spark.sparkContext.defaultParallelism
+    print(f"slots={slots}")
+    print("| tasks | udf | wall | slot s/task |")
+    print("|---|---|---|---|")
+    for tasks in (3, 12, 48):
+        rows = cached(base.repartition(tasks))
+        for name, fn in (("pandas identity", identity), ("native upper", F.upper)):
+            def run(fn=fn):
+                return rows.select(fn("s").alias("s")).collect()
+            run()  # warm-up: workers for this partition count
+            out, wall = timed(run, repeat=3)
+            assert sorted(r.s for r in out) == expected, name
+            print(f"| {tasks} | {name} | {wall:.3f}s | {wall * slots / tasks:.3f}s |")
+        rows.unpersist()
+
+
 ENTRIES = {
     "10m": soak_10m,
     "doremi": soak_doremi,
@@ -431,6 +462,7 @@ ENTRIES = {
     "round4": soak_round4,
     "semdedup": soak_semdedup,
     "tfidf_cosine": soak_tfidf_cosine,
+    "worker_tax": soak_worker_tax,
 }
 
 

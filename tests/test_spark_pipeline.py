@@ -26,6 +26,7 @@ def spark():
 
     s = get_spark(cpus=4, app_name="qf-tests", shuffle_partitions=8)
     assert s.conf.get("spark.ui.showConsoleProgress") == "false"
+    assert s.conf.get("spark.python.daemon.module") == "quality_filter.worker_daemon"
     yield s
     s.stop()
 
@@ -151,6 +152,74 @@ def test_plan_has_exactly_two_python_crossings(spark, pages_pdf):
     plan = score_documents(sdf)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 2, plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
+
+
+def test_workers_hold_no_plain_zip_importers(spark):
+    """Python workers run ``quality_filter.worker_daemon``: each zip
+    importer a worker holds ignores the per-task ``invalidate_caches``,
+    so no archive directory is re-read per task."""
+
+    def importer_types(batches):
+        import sys
+        import zipimport
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"t": [
+            type(f).__name__ for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)
+        ]})
+
+    df = spark.range(1, numPartitions=1).mapInPandas(importer_types, "t string")
+    got = [r.t for r in df.collect()]
+    assert got  # the worker imported pyspark from its zip
+    assert "zipimporter" not in got, got
+
+
+def test_worker_daemon_hook_reads_each_zip_once(tmp_path):
+    """Spark-free: with the hook installed, ``invalidate_caches`` does not
+    re-read a zip already imported from, and a zip put on ``sys.path``
+    afterwards still imports (the ``addPyFile`` contract).  Without the
+    hook CPython re-reads the first zip, which the counter must see."""
+    import subprocess
+    import sys
+    import textwrap
+    import zipfile
+
+    for name in ("a", "b"):
+        with zipfile.ZipFile(tmp_path / f"{name}.zip", "w") as z:
+            z.writestr(f"qf_zipmod_{name}.py", f"NAME = {name!r}\n")
+    code = textwrap.dedent(
+        """
+        import importlib, os, sys, zipimport
+        from quality_filter import worker_daemon
+
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(os.path.basename(archive))
+            return read_directory(archive)
+
+        zipimport._read_directory = counting
+        if sys.argv[2] == "hook":
+            worker_daemon.install()
+        sys.path.append(os.path.join(sys.argv[1], "a.zip"))
+        import qf_zipmod_a
+        sys.path.append(os.path.join(sys.argv[1], "b.zip"))
+        importlib.invalidate_caches()
+        import qf_zipmod_b
+        print(qf_zipmod_a.NAME, qf_zipmod_b.NAME, reads.count("a.zip"), reads.count("b.zip"))
+        """
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for mode, expected in (("hook", "a b 1 1"), ("plain", "a b 2 1")):
+        out = subprocess.run(
+            [sys.executable, "-c", code, str(tmp_path), mode], cwd=repo,
+            capture_output=True, text=True, env={**os.environ, "PYTHONPATH": repo},
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert out.stdout.split() == expected.split(), (mode, out.stdout)
 
 
 def test_pii_guard_edge_cases(spark):
